@@ -4,9 +4,10 @@ real: one POST per distinct key per flush, success iff HTTP 200.
 Executor-side delivery: the flush frame (one row per key) is sent via
 ``mapPartitions`` — per-partition imperative I/O is the one place the RDD
 API is justified (SURVEY §7); statuses, not data, come back to the driver.
-At scale the frame is repartitioned so each partition holds few keys and
-connections are reused within a partition (the reference's
-MaxIdleConnsPerHost analog is the per-task keep-alive handler).
+Each task POSTs its partition's rows in order. Connections are NOT reused:
+``urllib.request.urlopen`` opens a new connection for every POST (an HTTP
+collector counts one connection per POST), where the reference's client
+keeps idle connections per host (MaxIdleConnsPerHost).
 
 stdlib urllib only — no client library dependencies.
 """
@@ -61,8 +62,9 @@ def http_send(flush_frame: DataFrame) -> dict[str, bool]:
     return {k: ok for k, ok, _ in statuses.collect()}
 
 
-# NOTE: the DLQ replay path (streaming/pipeline.py replay_dlq) reuses
-# http_send for executor-side delivery — replay pacing lives in the
+# NOTE: the DLQ replay path (streaming/pipeline.py replay_dlq) calls
+# http_send per chunk for executor-side delivery — replay pacing lives in the
 # driver loop (chunked + throttled), but payload bytes never leave the
 # executors. The old http_send_driver (collect rows, send from the
 # driver) was removed for exactly that reason (VERDICT r3 #6).
+# As in the flush, each POST of a chunk opens its own connection.

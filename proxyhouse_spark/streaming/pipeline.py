@@ -32,7 +32,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
@@ -54,7 +54,10 @@ def _split_by_failure(grouped: DataFrame, fail_predicate: Column | None):
 
 
 def _split_by_statuses(
-    eligible: DataFrame, statuses: dict[str, bool], key: str = "uri"
+    eligible: DataFrame,
+    statuses: dict[str, bool],
+    key: str = "uri",
+    n_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the queue by per-``key`` delivery status WITHOUT an IN-literal:
     `isin([...ok_keys...])` inlines every key into the plan — a plan-size
@@ -66,11 +69,23 @@ def _split_by_statuses(
     but MUST be a per-packet identity on the replay path: distinct queued
     packets share a uri, and a uri-keyed dict collapses them — a packet
     that failed could inherit a later same-uri success and silently drop
-    from the queue (data loss)."""
-    spark = eligible.sparkSession
-    status_df = spark.createDataFrame(
-        [(u, bool(d)) for u, d in statuses.items()],
-        f"{key} string, delivered boolean",
+    from the queue (data loss).
+
+    No join runs when the outcome is uniform: nothing delivered, or — given
+    ``n_rows``, the frame's row count, and statuses for the frame's own keys
+    (the sender contract) — everything delivered."""
+    n_ok = sum(statuses.values())
+    if n_ok == 0:
+        return eligible.limit(0), eligible
+    if n_ok == n_rows:
+        return eligible, eligible.limit(0)
+    import pyarrow as pa
+
+    # Arrow, not a Python list (or an empty pandas frame, which falls back to
+    # one): that lineage holds a PythonRDD, and every read would start Python
+    # worker tasks; from Arrow it is a JVM-local relation
+    status_df = eligible.sparkSession.createDataFrame(
+        pa.table({key: list(statuses), "delivered": list(map(bool, statuses.values()))})
     )
     joined = eligible.join(F.broadcast(status_df), key, "left")
     delivered = F.coalesce(F.col("delivered"), F.lit(False))
@@ -316,11 +331,12 @@ class FlushPipeline:
 
     # -- one micro-batch = one reference flush cycle -------------------------
     def _flush(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
+        import time
 
         grouped = sink_frame(batch_df, self.fwd, self.repl).withColumn(
             "batch_id", F.lit(batch_id)
         )
+        n_keys = None  # counted on the sender path only
         if self.sender is not None:
             # real delivery: POST each key, partition by outcome. The frame
             # is one row per distinct key, so materializing it for the send
@@ -329,12 +345,22 @@ class FlushPipeline:
             # send + both filters: one compute. Scoped: a streaming query
             # checkpoints one flush frame per micro-batch — without freeing
             # the previous batch's blocks this leaks for the stream's
-            # lifetime (see checkpoints.py).
-            grouped = scoped_checkpoint(grouped, "flush_frame")
+            # lifetime (see checkpoints.py). The key count rides the
+            # checkpoint (observe), so no job probes the spill below.
+            keys_obs = Observation()
+            grouped = scoped_checkpoint(
+                grouped.observe(keys_obs, F.count(F.lit(1)).alias("keys")),
+                "flush_frame",
+            )
+            # sendDuration times the HTTP send, as the reference does
+            # (main.go:426), not the sink-table write
+            send_start = time.monotonic()
             delivered = self.sender(grouped)
+            send_ms = int((time.monotonic() - send_start) * 1000)
+            n_keys = keys_obs.get["keys"]
             # statuses join, not isin(): an IN-literal inlines every key
             # into the plan (see _split_by_statuses)
-            ok, failed = _split_by_statuses(grouped, delivered)
+            ok, failed = _split_by_statuses(grouped, delivered, n_rows=n_keys)
         else:
             ok, failed = _split_by_failure(grouped, self.fail_predicate)
         obs = Observation()
@@ -349,11 +375,10 @@ class FlushPipeline:
         writer = ok.coalesce(1).write.mode("append")
         if self.partition_by_table:
             writer = writer.partitionBy("table_name")
-        import time as _time
-
-        send_start = _time.monotonic()
+        write_start = time.monotonic()
         writer.parquet(self.sink_dir)
-        send_ms = int((_time.monotonic() - send_start) * 1000)
+        if self.sender is None:  # no sender: the sink write IS the send
+            send_ms = int((time.monotonic() - write_start) * 1000)
         m = {"batch_id": batch_id, **obs.get}
         self.metrics.append(m)
         if self.metric_storage is not None:
@@ -373,7 +398,11 @@ class FlushPipeline:
             F.lit(1).cast("int").alias("level"),  # first failure → level 1 (main.go:441)
             (F.unix_micros(F.current_timestamp()) * 1000).alias("created_ns"),
         )
-        if spilled.take(1):
+        if n_keys is None:  # a predicate split has no key count: probe
+            has_failed = bool(spilled.take(1))
+        else:  # failed keys = keys − delivered keys
+            has_failed = n_keys > m["requests_sent"]
+        if has_failed:
             spilled.coalesce(1).write.mode("append").parquet(self.dlq_dir)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
@@ -436,6 +465,20 @@ def replay_dlq(
     between chunks (main.go:480's 1 s pause) — gentle, ordered pressure on
     a recovering downstream, each chunk a single-task ordered send.
 
+    Spark jobs of one pass with a sender (AQE runs each shuffle or cache
+    stage as a job of its own):
+
+    - the DLQ read's schema inference;
+    - the replay sequence (window + cache), with ``count`` for the chunk loop;
+    - one send per chunk — the only Python-worker tasks;
+    - the ``replayed/`` append, only when a packet was delivered;
+    - the queue rewrite; ``requeued`` and ``quarantined`` ride it as
+      ``observe()`` metrics, and ``replayed`` is the sum of the statuses.
+
+    The delivery-status broadcast (a JVM-local Arrow relation) adds one job
+    to each write only when some packets were delivered and others not.
+    Without a sender, a ``count`` of the delivered rows replaces the sends.
+
     Returns counters {replayed, requeued, quarantined} (the reference's
     Graphite metrics analog)."""
     # Crash recovery: a kill between the two swap renames below leaves the
@@ -463,10 +506,10 @@ def replay_dlq(
             _shutil.rmtree(_old, ignore_errors=True)
     if not os.path.isdir(dlq_dir) or not os.listdir(dlq_dir):
         return {"replayed": 0, "requeued": 0, "quarantined": 0}
-    dlq = spark.read.parquet(dlq_dir).cache()
-    dlq.count()  # materialize before the directory is rewritten
-
-    eligible = dlq.filter(F.col("level") < MAX_LEVEL).orderBy("level", "created_ns")
+    # No cache: every read below runs before the swap renames, against the
+    # file list fixed when the frame is created.
+    dlq = spark.read.parquet(dlq_dir)
+    eligible = dlq.filter(F.col("level") < MAX_LEVEL)
     quarantined = dlq.filter(F.col("level") >= MAX_LEVEL)
 
     if sender is not None:
@@ -501,17 +544,25 @@ def replay_dlq(
                     F.col("seq").between(start, start + replay_batch_size - 1)
                 )
                 .select("seq", "packet_id", "uri", "target_url", "buffer")
-                .coalesce(1)  # one task → in-order, connection-reusing send
+                .coalesce(1)  # one task → in-order send
                 .sortWithinPartitions("seq")
             )
             statuses.update(sender(chunk))
             if throttle_seconds and start + replay_batch_size <= n_eligible:
                 _time.sleep(throttle_seconds)
-        ok, failed = _split_by_statuses(seqd, statuses, key="packet_id")
+        # the statuses hold every outcome: no job counts the delivered rows
+        n_replayed = sum(statuses.values())
+        ok, failed = _split_by_statuses(
+            seqd, statuses, key="packet_id", n_rows=n_eligible
+        )
         helper = ["seq", "packet_id", "target_url", "buffer"]
         ok, failed = ok.drop(*helper), failed.drop(*helper)
     else:
-        ok, failed = _split_by_failure(eligible, fail_predicate)
+        ok, failed = _split_by_failure(
+            eligible.orderBy("level", "created_ns"), fail_predicate
+        )
+        # the count doubles as the write guard below
+        n_replayed = ok.count()
     delivered = ok.select(
         "uri",
         F.col("body").alias("buffer"),
@@ -519,25 +570,23 @@ def replay_dlq(
         # reference (main.go:479) — we mark replayed rows -1 instead of lying
         F.lit(-1).cast("bigint").alias("batch_id"),
     )
-    # The replayed count is needed for the returned counters anyway; reusing
-    # it as the write guard saves the extra take(1) job (ok derives from the
-    # cached dlq frame, so the count is a cheap cached-filter scan). An
-    # unconditional write is NOT equivalent: an empty append still creates a
-    # zero-row part file, which the quarantine contract forbids
+    # An unconditional write is NOT equivalent: an empty append still
+    # creates a zero-row part file, which the quarantine contract forbids
     # (test_streaming.py pins no parquet under replayed/ when nothing ships).
-    n_replayed = ok.count()
     if n_replayed:
         delivered.coalesce(1).write.mode("append").parquet(
             os.path.join(sink_dir, "replayed")
         )
 
     escalated = failed.withColumn("level", (F.col("level") + 1).cast("int"))
-    new_dlq = escalated.unionByName(quarantined)
-    counts = {
-        "replayed": n_replayed,
-        "requeued": escalated.filter(F.col("level") < MAX_LEVEL).count(),
-        "quarantined": new_dlq.filter(F.col("level") >= MAX_LEVEL).count(),
-    }
+    # requeued/quarantined ride the queue rewrite below (observe), not
+    # count jobs of their own
+    obs = Observation()
+    new_dlq = escalated.unionByName(quarantined).observe(
+        obs,
+        F.count(F.when(F.col("level") < MAX_LEVEL, 1)).alias("requeued"),
+        F.count(F.when(F.col("level") >= MAX_LEVEL, 1)).alias("quarantined"),
+    )
     # rewrite the queue: tmp-dir + two-rename swap (the pudge-file delete
     # analog, crash-safe: rmtree-then-rename has a window that destroys
     # the queue outright — the sinks/compact.py swap discipline instead).
@@ -546,7 +595,7 @@ def replay_dlq(
     # appends and partition discovery keep working.
     tmp = dlq_dir.rstrip("/") + ".tmp"
     new_dlq.repartition("level").write.mode("overwrite").parquet(tmp)
-    dlq.unpersist()
+    counts = {"replayed": n_replayed, **obs.get}
     if sender is not None:
         seqd.unpersist()  # ok/failed derive from it — keep cached until here
     import shutil

@@ -176,3 +176,41 @@ def test_http_replay_same_uri_packets_keep_distinct_outcomes(
     assert left[0].level == 1  # escalated one retry level
     delivered = spark.read.parquet(f"{sink}/replayed").collect()
     assert [r.buffer for r in delivered] == ["(2)"]
+
+
+def test_http_replay_counts_deliver_escalate_and_quarantine(
+    spark, tmp_path, http_server
+):
+    """Replay counters over HTTP: ``replayed`` is the sum of the send
+    statuses, ``requeued``/``quarantined`` are observed on the queue
+    rewrite. One packet delivers, one fails at level 9 (escalates to the
+    quarantine level), one is already quarantined and is not sent."""
+    from proxyhouse_spark.operators.dlq import MAX_LEVEL
+    from proxyhouse_spark.streaming.pipeline import replay_dlq
+
+    dlq = str(tmp_path / "dlq")
+    sink = str(tmp_path / "sink")
+    cols = "uri string, body string, level int, created_ns bigint"
+    spark.createDataFrame(
+        [
+            ("/?query=a", "(ok)", 0, 100),
+            ("/?query=b", "(poison)", MAX_LEVEL - 1, 200),
+            ("/?query=c", "(parked)", MAX_LEVEL, 300),
+        ],
+        cols,
+    ).coalesce(1).write.parquet(dlq)
+
+    _Collector.fail_substring = "\x00never"
+    _Collector.fail_body_substring = "poison"
+    try:
+        counts = replay_dlq(spark, dlq, sink, sender=http_send, fwd=http_server)
+    finally:
+        _Collector.fail_substring = "bad"
+        _Collector.fail_body_substring = None
+    assert counts == {"replayed": 1, "requeued": 0, "quarantined": 2}
+    # the quarantined packet was never sent
+    assert sorted(b for _, b in _Collector.received) == ["(ok)", "(poison)"]
+    left = {r.body: r.level for r in spark.read.parquet(dlq).collect()}
+    assert left == {"(poison)": MAX_LEVEL, "(parked)": MAX_LEVEL}
+    delivered = spark.read.parquet(f"{sink}/replayed").collect()
+    assert [r.buffer for r in delivered] == ["(ok)"]

@@ -310,6 +310,71 @@ def test_split_by_statuses_is_a_join_not_an_in_literal(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def _python_lineage(df) -> bool:
+    """True when any RDD under ``df`` comes from a Python worker. The
+    final RDD's lineage misses a broadcast side (its rows ride a broadcast
+    variable), so the RDD leaves of the optimized plan are read too."""
+    qe = df._jdf.queryExecution()
+    lineages = [qe.toRdd().toDebugString()]
+    leaves = qe.optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD":
+            lineages.append(leaf.rdd().toDebugString())
+    return any("PythonRDD" in lineage for lineage in lineages)
+
+
+def test_split_by_statuses_runs_no_python_worker(spark):
+    """The delivery-status frame is a JVM-local relation: built from a
+    Python list its lineage held a PythonRDD, so each query that read the
+    split started Python worker tasks (~0.2 s of CPU each). Pinned for a
+    mixed dict, an empty one (an empty pandas frame would fall back to the
+    Python path) and a fully delivered one."""
+    from proxyhouse_spark.streaming.pipeline import _split_by_statuses
+
+    eligible = spark.range(4).select(
+        F.concat(F.lit("/u"), F.col("id").cast("string")).alias("uri"),
+        F.col("id").alias("n"),
+    )
+    cases = [
+        ({"/u0": True, "/u1": False}, None, 1),  # /u2, /u3 unknown → failed
+        ({}, None, 0),
+        ({f"/u{i}": True for i in range(4)}, 4, 4),
+    ]
+    for statuses, n_rows, n_ok in cases:
+        ok, failed = _split_by_statuses(eligible, statuses, n_rows=n_rows)
+        assert not _python_lineage(ok) and not _python_lineage(failed)
+        assert (ok.count(), failed.count()) == (n_ok, 4 - n_ok)
+        assert ok.columns == failed.columns == ["uri", "n"]
+
+
+def test_send_duration_times_the_sender(spark, dirs):
+    """sendDuration is the HTTP send's time (main.go:426), not the sink
+    table write's: a sender that sleeps 0.5 s reports at least 500 ms."""
+    import os
+    import time
+
+    from proxyhouse_spark.sinks.graphite import MetricStorage
+
+    def slow_sender(frame):
+        keys = [r.uri for r in frame.select("uri").collect()]
+        time.sleep(0.5)
+        return {k: True for k in keys}
+
+    reqs = [_req(1, "t0", "(1)"), _req(2, "t1", "(2)")]
+    spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
+    storage = MetricStorage()
+    pipe = FlushPipeline(
+        spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"],
+        sender=slow_sender, metric_storage=storage,
+    )
+    pipe.start(available_now=True).awaitTermination(120)
+    assert storage.snapshot()["sendDuration"] >= 500
+    assert pipe.metrics[0]["requests_sent"] == 2
+    assert spark.read.parquet(dirs["sink"]).count() == 2
+    assert not os.path.exists(dirs["dlq"])  # all delivered: nothing spilled
+
+
 def test_graphite_metrics_match_metric_counters(spark, dirs):
     """T-graphite (metric.go:21-60): run the REAL flush pipeline over the
     sf0.001 request fixture with a MetricStorage attached. Received-side
