@@ -33,9 +33,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from proxyhouse_spark.session import get_spark  # noqa: E402
 from proxyhouse_spark.sinks.graphite import MetricStorage  # noqa: E402
 from proxyhouse_spark.sources.http_ingest import IngestShim  # noqa: E402
+from proxyhouse_spark.streaming.passes import await_or_raise  # noqa: E402
 from proxyhouse_spark.streaming.pipeline import (  # noqa: E402
     FlushPipeline,
-    _await_or_raise,
     replay_dlq,
 )
 
@@ -94,10 +94,10 @@ def main() -> None:
         fail_predicate=F.col("table_name") == "logs",
         metric_storage=storage,
     )
-    # _await_or_raise fails loudly if the pass outlives the bound; a bare
+    # await_or_raise fails loudly if the pass outlives the bound; a bare
     # awaitTermination(120) would return False and let the script read a
     # partial/absent sink parquet with a confusing downstream error.
-    _await_or_raise(pipe.start(available_now=True), timeout_s=120)
+    await_or_raise(pipe.start(available_now=True), timeout_s=120)
     from proxyhouse_spark.functions.scalars import hide_password
 
     sink = spark.read.parquet(d["sink"]).select(

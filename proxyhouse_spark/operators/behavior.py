@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming import passes
 from ..tables import table
 
 
@@ -1155,11 +1156,9 @@ def _merge_triangles(
 
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read
-
     snap = os.path.join(base, "edges")
     deltas = os.path.join(base, "deltas")
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     pairs = (
         batch_df.alias("a")
@@ -1168,7 +1167,15 @@ def _merge_triangles(
         .selectExpr("a.part AS u", "b.part AS v")
         .distinct()
     )
-    index = _snapshot_read(spark, snap, "u bigint, v bigint").distinct()
+    # edges carry their batch id: a replay after a crash between the edge
+    # append and the marker reads the index WITHOUT its own rows, so it
+    # recomputes the same new edges and the same delta
+    index = (
+        passes.read_snapshot(spark, snap, "u bigint, v bigint, bid bigint")
+        .filter(F.col("bid") != batch_id)
+        .select("u", "v")
+        .distinct()
+    )
     new = pairs.join(index, ["u", "v"], "left_anti").localCheckpoint()
     # adjacency = accumulated ∪ new, both directions; the new-edge leg is
     # the small side of every join below
@@ -1192,8 +1199,10 @@ def _merge_triangles(
     spark.createDataFrame(
         [(batch_id, delta)], "bid bigint, delta bigint"
     ).write.mode("append").parquet(deltas)
-    new.write.mode("append").parquet(snap)
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    new.withColumn("bid", F.lit(batch_id).cast("bigint")).write.mode(
+        "append"
+    ).parquet(snap)
+    passes.mark_applied(snap, batch_id)
 
 
 def stream_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1202,32 +1211,15 @@ def stream_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembled summary must hash-match the one-shot batch q_triangles."""
     import os
 
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t18_tri_")
-    src = os.path.join(base, "source")
-    ckpt = os.path.join(base, "ckpt")
     table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     items = spark.sql(
         "SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem"
     )
-    items.filter("okey % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema("okey bigint, part bigint").parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_triangles(spark, df, base, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    items.filter("okey % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
-
+    base = passes.two_pass(
+        spark, sf_dir, "t18_tri_", items.filter("okey % 2 = 0"),
+        items.filter("okey % 2 = 1"),
+        passes.foreach_merge(spark, "okey bigint, part bigint", _merge_triangles),
+    )
     spark.read.parquet(os.path.join(base, "edges")).dropDuplicates(
         ["u", "v"]
     ).createOrReplaceTempView("tri_edges")
@@ -1254,11 +1246,6 @@ def stream_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM gstats g, estats e, tri t
         """
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf as _osc_tri  # noqa: E402
-
-stream_triangles_query = _osc_tri(stream_triangles_query)
 
 
 # ---------------------------------------------------------------------------
@@ -4240,57 +4227,35 @@ _GROWTH_SNAP_SCHEMA = "user_id bigint, day bigint"
 def _merge_user_days(
     spark: SparkSession, batch_df: DataFrame, snap_dir: str, batch_id: int
 ) -> None:
-    from .cdc import _snapshot_applied, _snapshot_read, _snapshot_swap
-
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     delta = batch_df.select("user_id", "day").distinct()
-    current = _snapshot_read(spark, snap_dir, _GROWTH_SNAP_SCHEMA)
-    merged = current.unionByName(delta).distinct()
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(4, "user_id").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _GROWTH_SNAP_SCHEMA,
+        lambda current: current.unionByName(delta)
+        .distinct()
+        .repartition(4, "user_id"),
+    )
 
 
 def stream_growth_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T18, oracle-checked: two availableNow passes maintaining the
     distinct user-day set; the ledger over the merged set must
     hash-match the one-shot batch q_growth_accounting."""
-    import os
+    from ..tables import EPOCH_NTZ
 
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-    from ..tables import EPOCH_NTZ, table
-
-    base = _scratch_dir("t18_growth_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "user_id",
         f"CAST(timestampdiff(MICROSECOND, {EPOCH_NTZ}, ts)"
         f" div {_TS_DAY} AS BIGINT) AS day",
     )
-    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, day bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_user_days(spark, df, snap, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(
-        src
+    snap = passes.two_pass(
+        spark, sf_dir, "t18_growth_", ev.filter("event_id % 2 = 0"),
+        ev.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, user_id bigint, day bigint",
+            _merge_user_days,
+        ),
     )
-    _await_or_raise(one_pass())
     spark.read.parquet(snap).createOrReplaceTempView("growth_snap")
     return spark.sql(
         "WITH "
@@ -4298,11 +4263,6 @@ def stream_growth_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "", "", ad_src="SELECT user_id, day FROM growth_snap"
         )
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf  # noqa: E402
-
-stream_growth_query = _oracle_stream_conf(stream_growth_query)
 
 
 # ---------------------------------------------------------------------------

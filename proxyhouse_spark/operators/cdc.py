@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..tables import table
-from ..streaming.pipeline import _oracle_stream_conf
+from ..streaming import passes
 
 # Portable changelog CTE: (seq, op, key, payload...). seq is the change
 # sequence number (commit LSN stand-in); higher seq wins. Prices are
@@ -162,81 +162,24 @@ _CHANGELOG_SCHEMA = (
 )
 
 
-# --- crash-safe, retry-idempotent snapshot store ----------------------------
-# foreachBatch is AT-LEAST-ONCE: a crash after the merge but before the
-# streaming checkpoint commits re-delivers the same micro-batch. Latest-wins
-# merges absorb a replay for free; ADDITIVE merges (the leaderboard below)
-# would double-add — so every merge is fenced with a per-batch marker file
-# written INSIDE the new snapshot directory (an `_`-prefixed file, invisible
-# to parquet readers) so marker and data become visible in the same rename.
-# The swap itself is two renames with a recovery path instead of
-# rmtree-then-rename, whose crash window destroys the snapshot outright.
-
-
-def _snapshot_read(spark: SparkSession, snap_dir: str, schema: str) -> DataFrame:
-    """Read the snapshot, recovering a crash between the two swap renames
-    (snap missing or empty while snap.old is intact)."""
-    import os
-
-    old = snap_dir.rstrip("/") + ".old"
-    if not (os.path.isdir(snap_dir) and os.listdir(snap_dir)) and os.path.isdir(old):
-        os.rename(old, snap_dir)
-    if os.path.isdir(snap_dir) and os.listdir(snap_dir):
-        return spark.read.parquet(snap_dir)
-    return spark.createDataFrame([], schema)
-
-
-def _snapshot_applied(snap_dir: str, batch_id: int) -> bool:
-    import os
-
-    return os.path.isfile(os.path.join(snap_dir, f"_applied_{batch_id}"))
-
-
-def _snapshot_swap(snap_dir: str, tmp: str, batch_id: int) -> None:
-    """Publish ``tmp`` as the snapshot: carry prior batch markers forward,
-    stamp this batch's marker into tmp (atomic with the data), then
-    rename(snap → old), rename(tmp → snap), drop old. A crash at any
-    point leaves either the old or the new snapshot fully intact
-    (recovered by _snapshot_read)."""
-    import os
-    import shutil
-
-    if os.path.isdir(snap_dir):
-        for f in os.listdir(snap_dir):
-            if f.startswith("_applied_"):
-                open(os.path.join(tmp, f), "w").close()
-    open(os.path.join(tmp, f"_applied_{batch_id}"), "w").close()
-    old = snap_dir.rstrip("/") + ".old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(snap_dir):
-        os.rename(snap_dir, old)
-    os.rename(tmp, snap_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _merge_snapshot(
     spark: SparkSession, batch_df: DataFrame, snap_dir: str, batch_id: int
 ) -> None:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    if _snapshot_applied(snap_dir, batch_id):
-        return  # at-least-once replay of a committed batch
-    current = _snapshot_read(spark, snap_dir, _CHANGELOG_SCHEMA)
-    merged = current.unionByName(batch_df)
     w = Window.partitionBy("o_orderkey").orderBy(F.col("seq").desc())
-    latest = (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
     # tombstones are KEPT in the snapshot store (a later batch must still
     # see that the key was deleted — dropping them here would resurrect a
     # key if an older update replayed); readers filter op <> 'D'
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    latest.repartition(4, "o_orderkey").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _CHANGELOG_SCHEMA,
+        lambda current: current.unionByName(batch_df)
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .drop("rn")
+        .repartition(4, "o_orderkey"),
+    )
 
 
 def cdc_apply_stream(
@@ -244,18 +187,11 @@ def cdc_apply_stream(
 ):
     """One availableNow pass applying the changelog stream to the
     snapshot directory via foreachBatch."""
-    stream = (
-        spark.readStream.schema(_CHANGELOG_SCHEMA).parquet(source_dir)
-    )
-    return (
-        stream.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda df, bid: _merge_snapshot(spark, df, snap_dir, bid))
-        .start()
+    return passes.foreach_merge(spark, _CHANGELOG_SCHEMA, _merge_snapshot)(
+        source_dir, snap_dir, checkpoint_dir
     )
 
 
-@_oracle_stream_conf
 def stream_cdc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8, oracle-checked: continuous CDC apply run as two REAL
     availableNow passes — pass 1 delivers the inserts and first updates
@@ -265,23 +201,13 @@ def stream_cdc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_cdc_upsert's oracle verbatim). Associativity of latest-wins is the
     property under test: batch boundaries must be invisible in the final
     state."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-    from ..tables import table
-
-    base = _scratch_dir("t8_cdc_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     changelog = spark.sql(f"WITH {_CHANGELOG} SELECT * FROM changelog")
-    changelog.filter(F.col("seq") <= 1).coalesce(1).write.parquet(src)
-    _await_or_raise(cdc_apply_stream(spark, src, snap, ckpt))
-    changelog.filter(F.col("seq") >= 2).coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(cdc_apply_stream(spark, src, snap, ckpt))
+    snap = passes.two_pass(
+        spark, sf_dir, "t8_cdc_", changelog.filter("seq <= 1"),
+        changelog.filter("seq >= 2"),
+        lambda *dirs: cdc_apply_stream(spark, *dirs),
+    )
     # versions per key come from the full changelog (the snapshot holds
     # only the surviving row); recompute declaratively like the batch op
     spark.read.parquet(snap).createOrReplaceTempView("snap")
@@ -325,64 +251,31 @@ def _merge_totals(
 
     # additive merges are NOT replay-idempotent (unlike latest-wins):
     # the per-batch fence is what makes at-least-once delivery safe here
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     batch_totals = batch_df.groupBy("user_id").agg(
         F.sum("cents").cast("bigint").alias("total_cents")
     )
-    current = _snapshot_read(spark, snap_dir, _TOTALS_SCHEMA)
-    merged = (
-        current.withColumnRenamed("total_cents", "prev")
-        .join(batch_totals.withColumnRenamed("total_cents", "delta"),
-              "user_id", "full_outer")
-        .select(
-            "user_id",
-            (F.coalesce(F.col("prev"), F.lit(0))
-             + F.coalesce(F.col("delta"), F.lit(0))).cast("bigint")
-            .alias("total_cents"),
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _TOTALS_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, batch_totals, ["user_id"], ["total_cents"]
+        ).repartition(4, "user_id"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(4, "user_id").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
-@_oracle_stream_conf
 def stream_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T9, oracle-checked: two availableNow passes (events split on
     event_id parity) maintaining the totals snapshot; the final top-10
     must hash-match the one-shot batch leaderboard."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t9_topk_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+    ev = table(spark, sf_dir, "events").selectExpr(
+        "event_id", "user_id", "CAST(round(value * 100) AS BIGINT) AS cents"
     )
-    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, cents bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_totals(spark, df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t9_topk_", ev.filter("event_id % 2 = 0"),
+        ev.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, user_id bigint, cents bigint", _merge_totals
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("totals_snap")
     return spark.sql(
         f"""
@@ -423,70 +316,38 @@ def _merge_psi_counts(
 ) -> None:
     from pyspark.sql import functions as F
 
-    if _snapshot_applied(snap_dir, batch_id):
-        return
-    batch_counts = batch_df.groupBy("event_type", "slice", "bin").agg(
+    keys = ["event_type", "slice", "bin"]
+    batch_counts = batch_df.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    current = _snapshot_read(spark, snap_dir, _PSI_COUNTS_SCHEMA)
-    merged = (
-        current.withColumnRenamed("n", "prev")
-        .join(
-            batch_counts.withColumnRenamed("n", "delta"),
-            ["event_type", "slice", "bin"],
-            "full_outer",
-        )
-        .select(
-            "event_type",
-            "slice",
-            "bin",
-            (F.coalesce(F.col("prev"), F.lit(0))
-             + F.coalesce(F.col("delta"), F.lit(0))).cast("bigint").alias("n"),
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _PSI_COUNTS_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, batch_counts, keys, ["n"]
+        ).repartition(2, "event_type"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "event_type").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
-@_oracle_stream_conf
 def stream_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T10, oracle-checked: two availableNow passes maintaining the PSI
     count snapshot; the PSI over the merged counts must hash-match the
     one-shot batch q_drift_psi."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
     from .behavior import _psi_sql
 
-    base = _scratch_dir("t10_drift_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "event_type",
         "CASE WHEN extract(day FROM ts) <= 15 THEN 0 ELSE 1 END AS slice",
         "CAST(greatest(least(floor(value / 50), 9), 0) AS BIGINT) AS bin",
     )
-    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, event_type string, slice int, bin bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_psi_counts(spark, df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t10_drift_", ev.filter("event_id % 2 = 0"),
+        ev.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, event_type string, slice int, bin bigint",
+            _merge_psi_counts,
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("psi_counts_snap")
     return spark.sql(
         "WITH "
@@ -524,71 +385,38 @@ def _merge_skyline(
 ) -> None:
     from pyspark.sql import functions as F
 
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     batch_pts = batch_df.groupBy("cents", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders")
     )
-    current = _snapshot_read(spark, snap_dir, _SKYLINE_SCHEMA)
-    unioned = (
-        current.withColumnRenamed("n_orders", "prev")
-        .join(
-            batch_pts.withColumnRenamed("n_orders", "delta"),
-            ["cents", "day"],
-            "full_outer",
-        )
-        .select(
-            "cents",
-            "day",
-            (F.coalesce(F.col("prev"), F.lit(0))
-             + F.coalesce(F.col("delta"), F.lit(0))).cast("bigint")
-            .alias("n_orders"),
-        )
-    )
-    unioned.createOrReplaceTempView("merged_pts")
-    # the frontier + one batch's distinct points is small; the direct
-    # sort-scan here is the right local plan (the BATCH operator q_skyline
-    # is where the distributed two-phase spelling lives)
-    frontier = spark.sql(_SKYLINE_FILTER)
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    frontier.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+
+    def fold(current: DataFrame) -> DataFrame:
+        passes.add_on_keys(
+            current, batch_pts, ["cents", "day"], ["n_orders"]
+        ).createOrReplaceTempView("merged_pts")
+        # the frontier + one batch's distinct points is small; the direct
+        # sort-scan here is the right local plan (the BATCH operator
+        # q_skyline is where the distributed two-phase spelling lives)
+        return spark.sql(_SKYLINE_FILTER).coalesce(1)
+
+    passes.merge_snapshot(spark, snap_dir, batch_id, _SKYLINE_SCHEMA, fold)
 
 
-@_oracle_stream_conf
 def stream_skyline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T11, oracle-checked: two availableNow passes maintaining the
     Pareto frontier; the final snapshot must hash-match the one-shot
     batch skyline (dominance-pruning mergeability under the gate)."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t11_sky_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     pts = table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
         "CAST(datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01') AS BIGINT) AS day",
     )
-    pts.filter("o_orderkey % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "o_orderkey bigint, cents bigint, day bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_skyline(spark, df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    pts.filter("o_orderkey % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t11_sky_", pts.filter("o_orderkey % 2 = 0"),
+        pts.filter("o_orderkey % 2 = 1"),
+        passes.foreach_merge(
+            spark, "o_orderkey bigint, cents bigint, day bigint", _merge_skyline
+        ),
+    )
     return spark.read.parquet(snap).select("cents", "day", "n_orders")
 
 
@@ -613,40 +441,30 @@ _COVERAGE_SCHEMA = "user_id bigint, island_s bigint, island_e bigint"
 def _merge_coverage(
     spark: SparkSession, batch_df: DataFrame, snap_dir: str, batch_id: int
 ) -> None:
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     from .behavior import _islands_sql
 
-    current = _snapshot_read(spark, snap_dir, _COVERAGE_SCHEMA)
-    merged_iv = current.selectExpr(
-        "user_id", "island_s AS s", "island_e AS e"
-    ).unionByName(batch_df.select("user_id", "s", "e"))
-    merged_iv.createOrReplaceTempView("merged_iv")
-    spans = spark.sql(
-        "WITH "
-        + _islands_sql("merged_iv")
-        + " SELECT user_id, island_s, island_e FROM spans"
-    )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    spans.repartition(2, "user_id").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+    def fold(current: DataFrame) -> DataFrame:
+        current.selectExpr(
+            "user_id", "island_s AS s", "island_e AS e"
+        ).unionByName(batch_df.select("user_id", "s", "e")).createOrReplaceTempView(
+            "merged_iv"
+        )
+        return spark.sql(
+            "WITH "
+            + _islands_sql("merged_iv")
+            + " SELECT user_id, island_s, island_e FROM spans"
+        ).repartition(2, "user_id")
+
+    passes.merge_snapshot(spark, snap_dir, batch_id, _COVERAGE_SCHEMA, fold)
 
 
-@_oracle_stream_conf
 def stream_coverage_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T12, oracle-checked: two availableNow passes maintaining the
     per-user island snapshot; the rollup over the merged islands must
     hash-match the one-shot batch q_interval_coverage."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
     from ..tables import EPOCH_NTZ
     from .behavior import COVERAGE_WINDOW_S
 
-    base = _scratch_dir("t12_cov_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     span = COVERAGE_WINDOW_S * 1_000_000
     iv = table(spark, sf_dir, "events").selectExpr(
         "event_id",
@@ -654,22 +472,14 @@ def stream_coverage_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"timestampdiff(MICROSECOND, {EPOCH_NTZ}, ts) AS s",
         f"timestampdiff(MICROSECOND, {EPOCH_NTZ}, ts) + {span} AS e",
     )
-    iv.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, s bigint, e bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_coverage(spark, df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    iv.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t12_cov_", iv.filter("event_id % 2 = 0"),
+        iv.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, user_id bigint, s bigint, e bigint",
+            _merge_coverage,
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("spans")
     from .behavior import _coverage_rollup_sql
 
@@ -731,7 +541,7 @@ def _merge_minhash(
 
     snap = os.path.join(base_dir, "index")
     pairs_dir = os.path.join(base_dir, "pairs")
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     sig_schema = (
         "doc_id bigint, sh array<bigint>, n_sh int, "
@@ -753,7 +563,7 @@ def _merge_minhash(
     # cross-restart duplicate sketch row is identical by construction,
     # so: its band rows are identical (absorbed by the candidate
     # DISTINCT), and any winner is correct wherever a dedup does run.
-    index_sig = _snapshot_read(spark, snap, sig_schema)
+    index_sig = passes.read_snapshot(spark, snap, sig_schema)
     # the index probe goes through the SAME band_explode as the batch
     # side — one copy of the band layout, so a band-count change can
     # never desync the probe from the stored index; only the narrow
@@ -858,27 +668,30 @@ def _merge_minhash(
     # back-fill executors the verify plan's tail leaves idle. Ordering
     # stays correct: the _applied marker lands only after BOTH jobs
     # return (a crash mid-merge replays the batch, exactly as before).
+    # Pool threads get no Spark local properties of their own (pinned
+    # thread mode), so each submission inherits the caller's job group
+    # and tags: cancelling the micro-batch's group must reach both jobs.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     index_rows = batch_sig.select(index_sig.columns).coalesce(8)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(
+        f1 = pool.submit(inheritable_thread_target(spark)(
             lambda: verified.write.mode("append").parquet(pairs_dir)
-        )
-        f2 = pool.submit(
+        ))
+        f2 = pool.submit(inheritable_thread_target(spark)(
             lambda: index_rows.write.mode("append").parquet(snap)
-        )
+        ))
         f1.result()
         f2.result()
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    passes.mark_applied(snap, batch_id)
     from ..checkpoints import release_scope
 
     release_scope(spark, "strmh_sig")
-    release_scope(spark, "strmh_sig_narrow")
     release_scope(spark, "strmh_cands")
 
 
-@_oracle_stream_conf
 def stream_minhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T13, oracle-checked: two availableNow passes of continuous MinHash
     dedup over the parity-split corpus; the accumulated pair set must
@@ -886,29 +699,14 @@ def stream_minhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verbatim)."""
     import os
 
-    from pyspark.sql import functions as F
-
     from ..sources.corpus import doc_corpus
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
 
-    base = _scratch_dir("t13_mh_")
-    src = os.path.join(base, "source")
-    ckpt = os.path.join(base, "ckpt")
     corpus = doc_corpus(spark, sf_dir).select("doc_id", "text")
-    corpus.filter("doc_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_minhash(spark, df, base, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    corpus.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    base = passes.two_pass(
+        spark, sf_dir, "t13_mh_", corpus.filter("doc_id % 2 = 0"),
+        corpus.filter("doc_id % 2 = 1"),
+        passes.foreach_merge(spark, "doc_id bigint, text string", _merge_minhash),
+    )
     return (
         spark.read.parquet(os.path.join(base, "pairs"))
         .dropDuplicates(["doc_a", "doc_b"])
@@ -976,8 +774,6 @@ def _merge_sessions(
 
     from .behavior import SESSION_GAP_S
 
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     gap = SESSION_GAP_S * 1_000_000
     if "event_id" in batch_df.columns:  # in-delivery duplicate guard
         batch_df = batch_df.dropDuplicates(["event_id"])
@@ -987,50 +783,33 @@ def _merge_sessions(
         (F.col("t") + gap).alias("e"),
         F.lit(1).cast("bigint").alias("n"),
     )
-    current = _snapshot_read(spark, snap_dir, _SESSION_SPANS_SCHEMA)
-    current.unionByName(batch_spans).createOrReplaceTempView("merged_spans")
-    spans = spark.sql("WITH " + _SESSION_MERGE)
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    spans.repartition(2, "user_id").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+
+    def fold(current: DataFrame) -> DataFrame:
+        current.unionByName(batch_spans).createOrReplaceTempView("merged_spans")
+        return spark.sql("WITH " + _SESSION_MERGE).repartition(2, "user_id")
+
+    passes.merge_snapshot(spark, snap_dir, batch_id, _SESSION_SPANS_SCHEMA, fold)
 
 
-@_oracle_stream_conf
 def stream_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T14, oracle-checked: two availableNow passes maintaining per-user
     session spans; ordinals + durations re-derived from the snapshot
     must hash-match the one-shot batch q_sessionize."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
     from ..tables import EPOCH_NTZ
     from .behavior import SESSION_GAP_S
 
-    base = _scratch_dir("t14_sess_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "user_id",
         f"timestampdiff(MICROSECOND, {EPOCH_NTZ}, ts) AS t",
     )
-    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, t bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_sessions(spark, df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t14_sess_", ev.filter("event_id % 2 = 0"),
+        ev.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, user_id bigint, t bigint", _merge_sessions
+        ),
+    )
     gap = SESSION_GAP_S * 1_000_000
     spark.read.parquet(snap).createOrReplaceTempView("session_spans")
     # ordinal + duration re-derived at read: e carries the +gap widening,
@@ -1072,83 +851,59 @@ def _merge_extrema(
 ) -> None:
     from pyspark.sql import functions as F
 
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     batch = batch_df.groupBy("event_type").agg(
         F.min("cents").cast("bigint").alias("mn"),
         F.max("cents").cast("bigint").alias("mx"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("total"),
     )
-    current = _snapshot_read(spark, snap_dir, _EXTREMA_SCHEMA)
-    merged = (
-        current.select(
-            "event_type",
-            F.col("mn").alias("p_mn"), F.col("mx").alias("p_mx"),
-            F.col("n").alias("p_n"), F.col("total").alias("p_total"),
+
+    def fold(current: DataFrame) -> DataFrame:
+        return (
+            current.select(
+                "event_type",
+                F.col("mn").alias("p_mn"), F.col("mx").alias("p_mx"),
+                F.col("n").alias("p_n"), F.col("total").alias("p_total"),
+            )
+            .join(batch, ["event_type"], "full_outer")
+            .select(
+                "event_type",
+                F.least(F.col("p_mn"), F.col("mn")).alias("raw_mn"),
+                F.greatest(F.col("p_mx"), F.col("mx")).alias("raw_mx"),
+                (F.coalesce(F.col("p_n"), F.lit(0))
+                 + F.coalesce(F.col("n"), F.lit(0))).cast("bigint").alias("n"),
+                (F.coalesce(F.col("p_total"), F.lit(0))
+                 + F.coalesce(F.col("total"), F.lit(0))).cast("bigint")
+                .alias("total"),
+            )
+            # least/greatest skip NULLs in Spark only when the other side is
+            # non-NULL — a type absent from one side carries through intact
+            .selectExpr(
+                "event_type",
+                "CAST(raw_mn AS BIGINT) AS mn",
+                "CAST(raw_mx AS BIGINT) AS mx",
+                "n", "total",
+            )
+            .repartition(2, "event_type")
         )
-        .join(batch, ["event_type"], "full_outer")
-        .select(
-            "event_type",
-            F.least(F.col("p_mn"), F.col("mn")).alias("raw_mn"),
-            F.greatest(F.col("p_mx"), F.col("mx")).alias("raw_mx"),
-            (F.coalesce(F.col("p_n"), F.lit(0))
-             + F.coalesce(F.col("n"), F.lit(0))).cast("bigint").alias("n"),
-            (F.coalesce(F.col("p_total"), F.lit(0))
-             + F.coalesce(F.col("total"), F.lit(0))).cast("bigint")
-            .alias("total"),
-        )
-        # least/greatest skip NULLs in Spark only when the other side is
-        # non-NULL — a type absent from one side carries through intact
-        .selectExpr(
-            "event_type",
-            "CAST(raw_mn AS BIGINT) AS mn",
-            "CAST(raw_mx AS BIGINT) AS mx",
-            "n", "total",
-        )
-    )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "event_type").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
+
+    passes.merge_snapshot(spark, snap_dir, batch_id, _EXTREMA_SCHEMA, fold)
 
 
-@_oracle_stream_conf
 def stream_extrema_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T15, oracle-checked: two availableNow passes maintaining the
     per-type metric envelope; must hash-match the one-shot batch."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t15_extrema_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+    ev = table(spark, sf_dir, "events").selectExpr(
+        "event_id", "event_type", "CAST(round(value * 100) AS BIGINT) AS cents"
     )
-    ev.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, event_type string, cents bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_extrema(spark, df, snap, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t15_extrema_", ev.filter("event_id % 2 = 0"),
+        ev.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, event_type string, cents bigint",
+            _merge_extrema,
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("extrema_snap")
     return spark.sql(
         "SELECT event_type, mn AS min_cents, mx AS max_cents, n, total "

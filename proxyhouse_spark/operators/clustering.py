@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.corpus import EMB_CORPUS_DUCK, EMB_CORPUS_SPARK
+from ..streaming import passes
 from ..tables import table
 
 K = 16
@@ -404,9 +405,7 @@ def _merge_kmeans(batch_df: DataFrame, cent_path: str, snap: str,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..operators.cdc import _snapshot_applied
-
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     sess = batch_df.sparkSession
     cents = sess.read.parquet(cent_path)
@@ -443,8 +442,11 @@ def _merge_kmeans(batch_df: DataFrame, cent_path: str, snap: str,
         .groupBy("c", "pos")
         .agg(F.count("*").alias("n"), F.sum("s_i").alias("s"))
     )
-    partial.write.mode("append").parquet(snap)
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    # one directory per batch, overwritten on replay: a crash between the
+    # write and the marker re-writes this batch's partials instead of
+    # appending them a second time (the read sums every row)
+    partial.write.mode("overwrite").parquet(os.path.join(snap, f"bid={batch_id}"))
+    passes.mark_applied(snap, batch_id)
 
 
 _KM_REPORT = """
@@ -469,13 +471,7 @@ def stream_kmeans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus."""
     import os
 
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t18_kmeans_")
-    src = os.path.join(base, "source")
-    cent = os.path.join(base, "quantizer")
-    snap = os.path.join(base, "partials")
-    ckpt = os.path.join(base, "ckpt")
+    cent = os.path.join(passes.scratch_dir("t18_kmeans_q_"), "quantizer")
     table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     # r11 measured-and-REVERTED (guide §1.1): staging this projection
     # once via scoped_checkpoint (it feeds the quantizer write, both
@@ -489,25 +485,14 @@ def stream_kmeans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.filter(f"vec_id < {K}").selectExpr(
         "CAST(vec_id AS INT) AS c", "e AS ce"
     ).coalesce(1).write.parquet(cent)
-    corpus.filter("vec_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "vec_id bigint, e array<double>"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_kmeans(df, cent, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    corpus.filter("vec_id % 2 = 1").coalesce(1).write.mode("append").parquet(
-        src
+    snap = passes.two_pass(
+        spark, sf_dir, "t18_kmeans_", corpus.filter("vec_id % 2 = 0"),
+        corpus.filter("vec_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "vec_id bigint, e array<double>",
+            lambda _, df, out, bid: _merge_kmeans(df, cent, out, bid),
+        ),
     )
-    _await_or_raise(one_pass())
-
     spark.read.parquet(snap).createOrReplaceTempView("km_partials")
     corpus.createOrReplaceTempView("embc")
     norm = _norm2("me", duck=False)
@@ -560,8 +545,3 @@ def stream_kmeans_oracle() -> str:
         """
         + report
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf as _osc_km  # noqa: E402
-
-stream_kmeans_query = _osc_km(stream_kmeans_query)

@@ -43,6 +43,7 @@ from ..checkpoints import release_scope, scoped_checkpoint
 from ..functions import text as T
 from ..functions import vectors as V
 from ..sources.corpus import DOC_CORPUS_SQL, doc_corpus, emb_corpus
+from ..streaming import passes
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1396,11 +1397,7 @@ def containment_dedup_oracle() -> str:
 
 
 def _merge_substr(batch_df: DataFrame, snap: str, batch_id: int) -> None:
-    import os
-
-    from .cdc import _snapshot_applied
-
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     k = SUBSTR_K
     grams = (
@@ -1415,38 +1412,23 @@ def _merge_substr(batch_df: DataFrame, snap: str, batch_id: int) -> None:
         )
     )
     grams.write.mode("append").parquet(snap)
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    passes.mark_applied(snap, batch_id)
 
 
 def stream_substring_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T16, oracle-checked: two availableNow passes maintain the
     gram-position index over the parity-split corpus; the read-time span
     report must hash-match the one-shot batch q_substring_dedup."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
     k = SUBSTR_K
-    base = _scratch_dir("t16_substr_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
     corpus = doc_corpus(spark, sf_dir).select("doc_id", "text")
-    corpus.filter("doc_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_substr(df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    corpus.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
-
+    snap = passes.two_pass(
+        spark, sf_dir, "t16_substr_", corpus.filter("doc_id % 2 = 0"),
+        corpus.filter("doc_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "doc_id bigint, text string",
+            lambda _, df, out, bid: _merge_substr(df, out, bid),
+        ),
+    )
     spark.read.parquet(snap).dropDuplicates(["doc_id", "p"]).createOrReplaceTempView(
         "substr_index"
     )
@@ -1467,13 +1449,6 @@ def stream_substring_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM isl GROUP BY doc_id, island
         """
     )
-
-
-# the scoped-conf decorator is applied post-def like quality.py's stream
-# audit (the streaming passes run eagerly inside)
-from ..streaming.pipeline import _oracle_stream_conf as _osc  # noqa: E402
-
-stream_substring_query = _osc(stream_substring_query)
 
 
 # ---------------------------------------------------------------------------

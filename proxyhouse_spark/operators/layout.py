@@ -295,9 +295,9 @@ def schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..streaming.pipeline import _scratch_dir
+    from ..streaming.passes import scratch_dir
 
-    base = _scratch_dir("s10_schemamerge_")
+    base = scratch_dir("s10_schemamerge_")
     ev = table(spark, sf_dir, "events")
     # generation 1: before the value column existed
     ev.filter("event_id % 2 = 0").select("event_id", "event_type").coalesce(
@@ -435,10 +435,10 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S12: Hive-partitioned write + directory-pruned day-range scan."""
     import os
 
-    from ..streaming.pipeline import _scratch_dir
+    from ..streaming.passes import scratch_dir
     from ..tables import EPOCH_NTZ
 
-    base = _scratch_dir("s12_prune_")
+    base = scratch_dir("s12_prune_")
     loc = os.path.join(base, "events_by_day")
     ev = table(spark, sf_dir, "events").selectExpr(
         "event_id",
@@ -506,9 +506,9 @@ _FORMAT_LEGS = ("parquet", "csv", "jsonl")
 def format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..streaming.pipeline import _scratch_dir
+    from ..streaming.passes import scratch_dir
 
-    base = _scratch_dir("s13_formats_")
+    base = scratch_dir("s13_formats_")
     ev = table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "event_type",

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import _stoplist_sql
+from ..streaming import passes
 from ..tables import table
 
 CAL_BINS = 10  # deciles of the score range; bin = score_bp div 1000
@@ -289,46 +290,22 @@ def _merge_auc_hist(
 ) -> None:
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read, _snapshot_swap
-
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     delta = batch_df.groupBy("score_bp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("n_pos"),
     )
-    current = _snapshot_read(spark, snap_dir, _AUC_SNAP_SCHEMA)
-    merged = (
-        current.withColumnRenamed("n", "pn")
-        .withColumnRenamed("n_pos", "pp")
-        .join(
-            delta.withColumnRenamed("n", "dn")
-            .withColumnRenamed("n_pos", "dp"),
-            "score_bp", "full_outer",
-        )
-        .selectExpr(
-            "score_bp",
-            "CAST(coalesce(pn, 0) + coalesce(dn, 0) AS BIGINT) AS n",
-            "CAST(coalesce(pp, 0) + coalesce(dp, 0) AS BIGINT) AS n_pos",
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _AUC_SNAP_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, delta, ["score_bp"], ["n", "n_pos"]
+        ).repartition(2, "score_bp"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "score_bp").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
 def stream_auc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17, oracle-checked: two availableNow passes maintaining the
     score histogram; the AUC readout over the merged histogram must
     hash-match the one-shot batch q_auc."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t17_auc_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     _docs(spark, sf_dir)
     scored = spark.sql(
         "WITH "
@@ -337,36 +314,18 @@ def stream_auc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + " SELECT doc_id, score_bp, pos FROM s"
     )
-    scored.filter("doc_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "doc_id bigint, score_bp bigint, pos int"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_auc_hist(spark, df, snap, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    scored.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(
-        src
+    snap = passes.two_pass(
+        spark, sf_dir, "t17_auc_", scored.filter("doc_id % 2 = 0"),
+        scored.filter("doc_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "doc_id bigint, score_bp bigint, pos int", _merge_auc_hist
+        ),
     )
-    _await_or_raise(one_pass())
     spark.read.parquet(snap).createOrReplaceTempView("auc_snap")
     return spark.sql(
         "WITH "
         + _auc_tail("SELECT score_bp, n, n_pos FROM auc_snap")
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf  # noqa: E402
-
-stream_auc_query = _oracle_stream_conf(stream_auc_query)
 
 
 # ---------------------------------------------------------------------------

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming import passes
 from ..tables import table
 
 # A violation = NOT coalesce(<compliance predicate>, FALSE): rows where
@@ -281,10 +282,6 @@ def _merge_audit(
 ) -> None:
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read, _snapshot_swap
-
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     # DataFrame API throughout — a foreachBatch frame lives in a CLONED
     # micro-batch session, so temp views registered on it are invisible
     # to the outer session's spark.sql (and vice versa)
@@ -331,23 +328,13 @@ def _merge_audit(
     ).groupBy("kind", "name", "k", "k_null").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    current = _snapshot_read(spark, snap_dir, _AUDIT_SNAP_SCHEMA)
-    merged = (
-        current.withColumnRenamed("n", "prev")
-        .join(
-            counters.unionByName(keys).withColumnRenamed("n", "delta"),
-            ["kind", "name", "k", "k_null"],
-            "full_outer",
-        )
-        .select(
-            "kind", "name", "k", "k_null",
-            (F.coalesce(F.col("prev"), F.lit(0))
-             + F.coalesce(F.col("delta"), F.lit(0))).cast("bigint").alias("n"),
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _AUDIT_SNAP_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, counters.unionByName(keys),
+            ["kind", "name", "k", "k_null"], ["n"],
+        ).repartition(2, "kind", "k"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "kind", "k").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
 def stream_constraint_audit_query(
@@ -356,40 +343,22 @@ def stream_constraint_audit_query(
     """T15, oracle-checked: two availableNow passes over parity-split
     orders maintaining the audit-metrics snapshot; the assembled report
     must hash-match the one-shot batch q_constraint_audit."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t15_audit_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     for t in ("orders", "lineitem", "customer"):
         table(spark, sf_dir, t).createOrReplaceTempView(t)
     ords = spark.table("orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate",
     )
-    ords.filter("o_orderkey % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
+    snap = passes.two_pass(
+        spark, sf_dir, "t15_audit_", ords.filter("o_orderkey % 2 = 0"),
+        ords.filter("o_orderkey % 2 = 1"),
+        passes.foreach_merge(
+            spark,
             "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-            "o_totalprice double, o_orderdate timestamp_ntz"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_audit(spark, df, snap, bid, sf_dir)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    ords.filter("o_orderkey % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
-
+            "o_totalprice double, o_orderdate timestamp_ntz",
+            lambda s, df, out, bid: _merge_audit(s, df, out, bid, sf_dir),
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("audit_snap")
     # read-time assembly: counters verbatim; uniqueness re-derived from the
     # keyed counts; the static lineitem checks computed directly; the
@@ -423,14 +392,6 @@ def stream_constraint_audit_query(
         {_TAIL}
         """
     )
-
-
-# applied post-def to keep this module's top-level imports light (the
-# streaming passes run eagerly inside, so the scoped conf is correct here
-# exactly as for the cdc.py stream queries)
-from ..streaming.pipeline import _oracle_stream_conf  # noqa: E402
-
-stream_constraint_audit_query = _oracle_stream_conf(stream_constraint_audit_query)
 
 
 # ---------------------------------------------------------------------------
@@ -1022,28 +983,15 @@ def _merge_mi_cells(
 ) -> None:
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read, _snapshot_swap
-
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     delta = batch_df.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    current = _snapshot_read(spark, snap_dir, _MI_SNAP_SCHEMA)
-    merged = (
-        current.withColumnRenamed("c", "prev")
-        .join(delta.withColumnRenamed("c", "delta"),
-              ["lang", "source"], "full_outer")
-        .select(
-            "lang", "source",
-            (F.coalesce(F.col("prev"), F.lit(0))
-             + F.coalesce(F.col("delta"), F.lit(0))).cast("bigint")
-            .alias("c"),
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _MI_SNAP_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, delta, ["lang", "source"], ["c"]
+        ).repartition(2, "lang"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "lang").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
 def stream_mutual_info_query(
@@ -1053,42 +1001,20 @@ def stream_mutual_info_query(
     documents maintaining the contingency-cell snapshot; the MI/H/NMI
     readout over the merged cells must hash-match the one-shot batch
     q_mutual_info."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t16_mi_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "doc_id bigint, lang string, source string"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_mi_cells(spark, df, snap, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    snap = passes.two_pass(
+        spark, sf_dir, "t16_mi_", docs.filter("doc_id % 2 = 0"),
+        docs.filter("doc_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "doc_id bigint, lang string, source string", _merge_mi_cells
+        ),
+    )
     spark.read.parquet(snap).createOrReplaceTempView("mi_snap")
     return spark.sql(
         "WITH " + _mi_sql("SELECT lang, source, c FROM mi_snap")
     )
-
-
-stream_mutual_info_query = _oracle_stream_conf(stream_mutual_info_query)
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import vectors as V
 from ..sources.corpus import EMB_CORPUS_DUCK, emb_corpus
+from ..streaming import passes
 
 PROBE_VEC_ID = 0
 K = 10
@@ -473,48 +474,27 @@ def ann_recall_oracle() -> str:
 
 
 def _merge_ann(batch_df: DataFrame, snap: str, batch_id: int) -> None:
-    import os
-
-    from ..operators.cdc import _snapshot_applied
-
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     cell = f"substr({V.lsh_bucket_spark('e')}, 1, {N_CELL_BITS})"
     coded = batch_df.selectExpr("vec_id", "label", "e", f"{cell} AS cell")
     coded.write.mode("append").parquet(snap)
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    passes.mark_applied(snap, batch_id)
 
 
 def stream_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17, oracle-checked: two availableNow passes maintain the IVF coded
     index; the multi-probe query over the accumulated index must
     hash-match the one-shot batch q_knn_ivf."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t17_ann_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
     corpus = emb_corpus(spark, sf_dir).select("vec_id", "label", "e")
-    corpus.filter("vec_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "vec_id bigint, label int, e array<double>"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_ann(df, snap, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    corpus.filter("vec_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
-
+    snap = passes.two_pass(
+        spark, sf_dir, "t17_ann_", corpus.filter("vec_id % 2 = 0"),
+        corpus.filter("vec_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "vec_id bigint, label int, e array<double>",
+            lambda _, df, out, bid: _merge_ann(df, out, bid),
+        ),
+    )
     spark.read.parquet(snap).dropDuplicates(["vec_id"]).createOrReplaceTempView(
         "ann_index"
     )
@@ -530,11 +510,6 @@ def stream_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         LIMIT {K}
         """
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf as _osc  # noqa: E402
-
-stream_ann_query = _osc(stream_ann_query)
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming import passes
 from ..tables import table
 
 WORLD_M = 1_000_000   # 1000 km planar square
@@ -284,11 +285,9 @@ def _merge_spatial(
 
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read
-
     snap = os.path.join(base_dir, "index")
     pairs_dir = os.path.join(base_dir, "pairs")
-    if _snapshot_applied(snap, batch_id):
+    if passes.applied(snap, batch_id):
         return
     # RAW index read — no per-batch dedup. The old dropDuplicates(["id"])
     # here shuffled the whole index through an id exchange every batch,
@@ -296,7 +295,7 @@ def _merge_spatial(
     # re-delivered point's duplicate row is identical by construction,
     # so its duplicate hits collapse in the pair DISTINCT below and the
     # emitted set is unchanged (r10, the _merge_minhash finding).
-    index = _snapshot_read(spark, snap, "id bigint, x bigint, y bigint")
+    index = passes.read_snapshot(spark, snap, "id bigint, x bigint, y bigint")
     build = index.unionByName(batch_df.select("id", "x", "y"))
     cell = build.select(
         "id", "x", "y",
@@ -343,7 +342,7 @@ def _merge_spatial(
     hits.write.mode("append").parquet(pairs_dir)
     # append-only index + idempotency marker (the stream_minhash contract)
     batch_df.select("id", "x", "y").write.mode("append").parquet(snap)
-    open(os.path.join(snap, f"_applied_{batch_id}"), "w").close()
+    passes.mark_applied(snap, batch_id)
 
 
 def stream_spatial_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,11 +351,6 @@ def stream_spatial_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the one-shot batch q_spatial_join (its oracle verbatim)."""
     import os
 
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
-
-    base = _scratch_dir("t20_sp_")
-    src = os.path.join(base, "source")
-    ckpt = os.path.join(base, "ckpt")
     _customer(spark, sf_dir)
     pts = spark.sql(
         "WITH "
@@ -365,33 +359,13 @@ def stream_spatial_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + " SELECT id, x, y FROM pts"
     )
-    pts.filter("id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "id bigint, x bigint, y bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: _merge_spatial(spark, df, base, bid))
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    pts.filter("id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    _await_or_raise(one_pass())
+    base = passes.two_pass(
+        spark, sf_dir, "t20_sp_", pts.filter("id % 2 = 0"),
+        pts.filter("id % 2 = 1"),
+        passes.foreach_merge(spark, "id bigint, x bigint, y bigint", _merge_spatial),
+    )
     return (
         spark.read.parquet(os.path.join(base, "pairs"))
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "d2")
     )
-
-
-def _wrap_stream_spatial():
-    from ..streaming.pipeline import _oracle_stream_conf
-
-    return _oracle_stream_conf(stream_spatial_query)
-
-
-stream_spatial_query = _wrap_stream_spatial()

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming import passes
 from ..tables import table
 
 DAY_US = 86_400_000_000
@@ -314,43 +315,23 @@ def _merge_daily_counts(
 ) -> None:
     from pyspark.sql import functions as F
 
-    from .cdc import _snapshot_applied, _snapshot_read, _snapshot_swap
-
-    if _snapshot_applied(snap_dir, batch_id):
-        return
     delta = batch_df.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    current = _snapshot_read(spark, snap_dir, _CP_SNAP_SCHEMA)
-    merged = (
-        current.withColumnRenamed("n", "pn")
-        .join(
-            delta.withColumnRenamed("n", "dn"),
-            ["event_type", "day"], "full_outer",
-        )
-        .selectExpr(
-            "event_type", "day",
-            "CAST(coalesce(pn, 0) + coalesce(dn, 0) AS BIGINT) AS n",
-        )
+    passes.merge_snapshot(
+        spark, snap_dir, batch_id, _CP_SNAP_SCHEMA,
+        lambda current: passes.add_on_keys(
+            current, delta, ["event_type", "day"], ["n"]
+        ).repartition(2, "event_type"),
     )
-    tmp = snap_dir.rstrip("/") + ".tmp"
-    merged.repartition(2, "event_type").write.mode("overwrite").parquet(tmp)
-    _snapshot_swap(snap_dir, tmp, batch_id)
 
 
 def stream_changepoint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T19, oracle-checked: two availableNow passes maintaining the
     (type, day) count snapshot; the changepoint readout over the merged
     state must hash-match the one-shot batch q_changepoint."""
-    import os
-
-    from ..streaming.pipeline import _await_or_raise, _scratch_dir
     from ..tables import EPOCH_NTZ
 
-    base = _scratch_dir("t18_cp_")
-    src = os.path.join(base, "source")
-    snap = os.path.join(base, "snap")
-    ckpt = os.path.join(base, "ckpt")
     _events(spark, sf_dir)
     keyed = spark.sql(
         f"""
@@ -360,36 +341,19 @@ def stream_changepoint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
         """
     )
-    keyed.filter("event_id % 2 = 0").coalesce(1).write.parquet(src)
-
-    def one_pass():
-        stream = spark.readStream.schema(
-            "event_id bigint, event_type string, day bigint"
-        ).parquet(src)
-        return (
-            stream.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, bid: _merge_daily_counts(spark, df, snap, bid)
-            )
-            .start()
-        )
-
-    _await_or_raise(one_pass())
-    keyed.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(
-        src
+    snap = passes.two_pass(
+        spark, sf_dir, "t18_cp_", keyed.filter("event_id % 2 = 0"),
+        keyed.filter("event_id % 2 = 1"),
+        passes.foreach_merge(
+            spark, "event_id bigint, event_type string, day bigint",
+            _merge_daily_counts,
+        ),
     )
-    _await_or_raise(one_pass())
     spark.read.parquet(snap).createOrReplaceTempView("cp_snap")
     return spark.sql(
         "WITH daily AS (SELECT event_type, day, n FROM cp_snap),"
         + _changepoint_tail("div")
     )
-
-
-from ..streaming.pipeline import _oracle_stream_conf  # noqa: E402
-
-stream_changepoint_query = _oracle_stream_conf(stream_changepoint_query)
 
 
 # ---------------------------------------------------------------------------

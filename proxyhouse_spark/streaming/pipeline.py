@@ -40,6 +40,7 @@ from ..checkpoints import scoped_checkpoint
 from ..operators.dlq import MAX_LEVEL
 from ..operators.ingest import FWD_HOST, REPL_HOST, sink_frame
 from ..sinks.graphite import PREFIX_AVG, PREFIX_CNT, MetricStorage
+from .passes import parquet_sink, scratch_dir, two_pass
 
 SinkAttempt = Callable[[DataFrame], tuple[DataFrame, DataFrame]]
 
@@ -95,115 +96,6 @@ def _split_by_statuses(
     )
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Session-scoped scratch for the streaming oracle passes. The returned
-    DataFrames read from these dirs lazily, so they must outlive the call;
-    they are removed at interpreter exit instead of leaking across repeated
-    invocations."""
-    import atexit
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix=prefix)
-    if not _SCRATCH_DIRS:
-        atexit.register(_cleanup_scratch)
-    _SCRATCH_DIRS.append(base)
-    return base
-
-
-def _cleanup_scratch() -> None:
-    import shutil
-
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-#: state-store partition count for the q_stream_* oracle passes. A
-#: stateful streaming query materializes one state-store instance per
-#: shuffle partition per stateful operator per micro-batch; over the tiny
-#: fixture slices that fixed cost dwarfs the data at the vanilla
-#: session's 32 partitions. The count is baked in at first query start
-#: from the session conf (fresh checkpoints every invocation, so 8 here
-#: never conflicts), and production pipelines are untouched — they keep
-#: the session default, sized to the executor fleet.
-#: Env override for the ~sf1 digest runs: at 100x the gate fixture the
-#: stateful-join work dominates the per-partition fixed cost, and 8
-#: partitions on 32 cores leaves the host 4x underparallelized (the round-6
-#: sf1 interval-join digest timed out at 8). Results are partition-count
-#: invariant (the local[5] axis proves it), so this only moves wall time.
-STREAM_ORACLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_ORACLE_PARTITIONS", "8")
-)
-
-#: RocksDB state store: the production knob for when streaming state
-#: exceeds executor heap (true 100-TB interval joins). Measured at sf0.1
-#: the state fits in memory and the heap provider is faster (18.6 s vs
-#: 22.6 s — the JNI write/read path has no GC win to pay it back at this
-#: scale), so heap stays the default and RocksDB is env-selected:
-#: SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb.
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _stream_partitions_for(sf_dir: str) -> int:
-    """Autoscale the stateful-shuffle width from input bytes when the env
-    override is absent: 8 partitions amortize per-partition state-store
-    fixed costs at gate scale (sf0.01), but underparallelize 4x at ~sf1
-    where the join/agg work dominates (the r06 sf1 digest timed out at 8).
-    Threshold: events source > 4 MiB (sf0.1 is ~2 MiB, ~sf1 is ~16 MiB)
-    → use the full local core count. Results are partition-count invariant
-    (the local[5] verify axis proves it); this only moves wall time."""
-    if "SPARK_GRAFT_STREAM_ORACLE_PARTITIONS" in os.environ:
-        return STREAM_ORACLE_PARTITIONS
-    try:
-        p = os.path.join(sf_dir, "events.parquet")
-        size = (
-            sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p)
-                if not f.startswith("_")
-            )
-            if os.path.isdir(p)
-            else os.path.getsize(p)
-        )
-    except OSError:
-        return STREAM_ORACLE_PARTITIONS
-    return 32 if size > 4 * 1024 * 1024 else STREAM_ORACLE_PARTITIONS
-
-
-def _oracle_stream_conf(fn):
-    """Scope ``spark.sql.shuffle.partitions`` (autoscaled, see
-    ``_stream_partitions_for``) and the state-store provider to a
-    q_stream_* oracle function, restoring the caller's settings after.
-    The expensive streaming passes run EAGERLY inside the function
-    (awaitTermination); the returned DataFrame only re-reads their parquet
-    output, so the restore cannot affect results."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = "spark.sql.shuffle.partitions"
-        pkey = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key)
-        prev_provider = spark.conf.get(pkey, None)
-        spark.conf.set(key, str(_stream_partitions_for(sf_dir)))
-        if os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER") == "rocksdb":
-            spark.conf.set(pkey, _ROCKSDB_PROVIDER)
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set(key, prev)
-            if prev_provider is None:
-                spark.conf.unset(pkey)
-            else:
-                spark.conf.set(pkey, prev_provider)
-
-    return wrapper
-
-
 def unload_state_stores(spark: SparkSession) -> None:
     """EXPLICIT hygiene: release finished queries' state-store heap now.
 
@@ -231,20 +123,6 @@ def unload_state_stores(spark: SparkSession) -> None:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception:
         pass  # internal API; a Spark upgrade must not break the data path
-
-
-def _await_or_raise(q: StreamingQuery, timeout_s: int | None = None) -> None:
-    """availableNow passes finish in seconds at gate scale; a False return
-    from awaitTermination means the pass is still running and the output dir
-    is incomplete — fail loudly instead of reading partial results as a
-    confusing oracle mismatch.  SPARK_GRAFT_STREAM_TIMEOUT_S raises the
-    bound for ~sf1 differential runs (the 90M-row interval join needs more
-    than the 300 s that covers every gate-scale pass)."""
-    if timeout_s is None:
-        timeout_s = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_S", "300"))
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"streaming pass still running after {timeout_s}s")
 
 
 class GraphiteListener(StreamingQueryListener):
@@ -618,7 +496,6 @@ def replay_dlq(
 # ---------------------------------------------------------------------------
 
 
-@_oracle_stream_conf
 def flush_trigger_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: one availableNow pass over the request stream (single source file
     → single micro-batch). The flushed sink must equal the batch
@@ -626,20 +503,17 @@ def flush_trigger_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's map-swap-flush semantics."""
     from ..sources.requests import requests_df
 
-    base = _scratch_dir("t1_flush_")
-    dirs = {k: os.path.join(base, k) for k in ("source", "sink", "dlq", "ckpt")}
-    requests_df(spark, sf_dir).coalesce(1).write.parquet(dirs["source"])
-    pipe = FlushPipeline(
-        spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"]
+    out = two_pass(
+        spark, sf_dir, "t1_flush_", requests_df(spark, sf_dir), None,
+        lambda src, out, ckpt: FlushPipeline(
+            spark, src, out, out + "_dlq", ckpt
+        ).start(available_now=True),
     )
-    q = pipe.start(available_now=True)
-    _await_or_raise(q)
-    return spark.read.parquet(dirs["sink"]).select(
+    return spark.read.parquet(out).select(
         "uri", "target_url", "table_name", "buffer", "rowcount", "n_requests"
     )
 
 
-@_oracle_stream_conf
 def dlq_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: one recovery pass over a synthetic DLQ where every odd-level
     packet fails again (deterministic). Returns the post-replay queue state:
@@ -648,7 +522,7 @@ def dlq_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.go:447-485, 365-373) as a checkable table."""
     from ..operators.dlq import dlq_frame
 
-    base = _scratch_dir("t2_replay_")
+    base = scratch_dir("t2_replay_")
     dlq_dir = os.path.join(base, "dlq")
     sink_dir = os.path.join(base, "sink")
     dlq_frame(spark, sf_dir).coalesce(1).write.parquet(dlq_dir)
@@ -725,13 +599,7 @@ def cumulative_counters(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        counted.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(counted, out_dir, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -784,13 +652,7 @@ def windowed_counts(
             "n_requests",
         )
     )
-    return (
-        counted.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(counted, out_dir, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -824,13 +686,7 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "recv_ts", "uri", "body")
     )
-    return (
-        deduped.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(deduped, out_dir, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -866,16 +722,9 @@ def enrich_stream(
     enriched = stream.join(dim, "table_name", "left").select(
         "event_id", "recv_ts", "uri", "table_name", "route", "body"
     )
-    return (
-        enriched.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(enriched, out_dir, checkpoint_dir)
 
 
-@_oracle_stream_conf
 def stream_cumulative_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4, oracle-checked: the custom stateful operator
     (applyInPandasWithState cumulative per-key totals) run as TWO real
@@ -888,17 +737,12 @@ def stream_cumulative_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential gate rather than only in pytest."""
     from ..sources.requests import requests_df
 
-    base = _scratch_dir("t4_cum_")
-    src = os.path.join(base, "source")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     req = requests_df(spark, sf_dir)
-    req.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    q = cumulative_counters(spark, src, out, ckpt)
-    _await_or_raise(q)
-    req.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    q = cumulative_counters(spark, src, out, ckpt)
-    _await_or_raise(q)
+    out = two_pass(
+        spark, sf_dir, "t4_cum_", req.filter(F.col("event_id") % 2 == 0),
+        req.filter(F.col("event_id") % 2 == 1),
+        lambda *dirs: cumulative_counters(spark, *dirs),
+    )
     emitted = spark.read.parquet(out)
     # totals are monotone per key, so the final state is the max emission;
     # keys whose data all arrived in pass 1 emit nothing in pass 2 (append
@@ -909,7 +753,6 @@ def stream_cumulative_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_oracle_stream_conf
 def stream_windowed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3, oracle-checked: the REAL watermarked event-time windowed stream,
     run as two availableNow passes. Pass 1 (even event_ids) advances the
@@ -921,19 +764,14 @@ def stream_windowed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     advancement, late-row drops, and append-mode emission are all proven
     through the driver's differential gate."""
     from ..sources.requests import requests_df
-
-    base = _scratch_dir("t3_window_")
-    src = os.path.join(base, "source")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    req = requests_df(spark, sf_dir)
-    req.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    q = windowed_counts(spark, src, out, ckpt)
-    _await_or_raise(q)
-    req.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    q = windowed_counts(spark, src, out, ckpt)
-    _await_or_raise(q)
     from ..tables import EPOCH_NTZ
+
+    req = requests_df(spark, sf_dir)
+    out = two_pass(
+        spark, sf_dir, "t3_window_", req.filter(F.col("event_id") % 2 == 0),
+        req.filter(F.col("event_id") % 2 == 1),
+        lambda *dirs: windowed_counts(spark, *dirs),
+    )
 
     # window_start back to NTZ wall clock (instant → naive-as-UTC) so the
     # driver's canonicalizer compares it against DuckDB naive timestamps
@@ -946,7 +784,6 @@ def stream_windowed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_oracle_stream_conf
 def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6, oracle-checked: watermark-bounded streaming dedup under DLQ-style
     replay. Pass 1 streams the even-id requests; pass 2 streams the odd-id
@@ -963,22 +800,15 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 10min survive. The reference cannot do this at all — its replay path
     knowingly re-delivers duplicates (SURVEY §2.9 T5)."""
     from ..sources.requests import requests_df
-
-    base = _scratch_dir("t6_dedup_")
-    src = os.path.join(base, "source")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    req = requests_df(spark, sf_dir)
-    req.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    q = dedup_stream(spark, src, out, ckpt)
-    _await_or_raise(q)
-    replay = req.filter(F.col("event_id") % 6 == 0)
-    req.filter(F.col("event_id") % 2 == 1).unionByName(replay).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = dedup_stream(spark, src, out, ckpt)
-    _await_or_raise(q)
     from ..tables import EPOCH_NTZ
+
+    req = requests_df(spark, sf_dir)
+    replay = req.filter(F.col("event_id") % 6 == 0)
+    out = two_pass(
+        spark, sf_dir, "t6_dedup_", req.filter(F.col("event_id") % 2 == 0),
+        req.filter(F.col("event_id") % 2 == 1).unionByName(replay),
+        lambda *dirs: dedup_stream(spark, *dirs),
+    )
 
     return spark.read.parquet(out).select(
         "event_id",
@@ -995,7 +825,6 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 ENRICH_ROUTES = (("click", "ch-0"), ("view", "ch-1"), ("error", "ch-2"))
 
 
-@_oracle_stream_conf
 def stream_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6b, oracle-checked: one REAL availableNow pass of the stream-static
     broadcast enrichment join (per-batch re-read routing dim, stream never
@@ -1005,17 +834,14 @@ def stream_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.go:36-37). The sink must hash-match the plain batch SQL join."""
     from ..sources.requests import requests_df
 
-    base = _scratch_dir("t6_enrich_")
-    src = os.path.join(base, "source")
-    dim = os.path.join(base, "dim")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    requests_df(spark, sf_dir).coalesce(1).write.parquet(src)
+    dim = os.path.join(scratch_dir("t6_enrich_dim_"), "dim")
     spark.createDataFrame(
         list(ENRICH_ROUTES), "table_name string, route string"
     ).coalesce(1).write.parquet(dim)
-    q = enrich_stream(spark, src, dim, out, ckpt)
-    _await_or_raise(q)
+    out = two_pass(
+        spark, sf_dir, "t6_enrich_", requests_df(spark, sf_dir), None,
+        lambda src, out, ckpt: enrich_stream(spark, src, dim, out, ckpt),
+    )
     return spark.read.parquet(out).select(
         "event_id", "uri", "table_name", "route"
     )
@@ -1139,13 +965,7 @@ def interval_join_stream(
         ),
         join_type,
     ).select("a_id", "b_id", "uri", "a_ts", "b_ts")
-    return (
-        joined.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(joined, out_dir, checkpoint_dir)
 
 
 def _interval_join_two_pass(
@@ -1156,16 +976,9 @@ def _interval_join_two_pass(
     from pass 1's checkpoint, so the cross-restart join state is
     exercised, while the split arithmetic (see IJOIN_SPLIT) guarantees
     no row is late and no INNER partner is evicted early."""
-    import os
-
     from ..sources.requests import requests_df
     from ..tables import EPOCH_NTZ
 
-    base = _scratch_dir("t7_ijoin_")
-    a_src = os.path.join(base, "a")
-    b_src = os.path.join(base, "b")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     req = requests_df(spark, sf_dir)
     split = F.expr(f"TIMESTAMP_NTZ '{IJOIN_SPLIT}'")
     # BOTH sides are split at IJOIN_SPLIT. A one-sided split (r07 shape)
@@ -1187,18 +1000,17 @@ def _interval_join_two_pass(
     # pass-1 A state is split-bounded, so pass-1 probes scan less.
     a_rows = req.filter(F.col("event_id") % 2 == 0)
     b_rows = req.filter(F.col("event_id") % 2 == 1)
-    a_rows.filter(F.col("recv_ts") <= split).coalesce(1).write.parquet(a_src)
-    b_rows.filter(F.col("recv_ts") <= split).coalesce(1).write.parquet(b_src)
-    q = interval_join_stream(spark, a_src, b_src, out, ckpt, join_type)
-    _await_or_raise(q)
-    a_rows.filter(F.col("recv_ts") > split).coalesce(1).write.mode(
-        "append"
-    ).parquet(a_src)
-    b_rows.filter(F.col("recv_ts") > split).coalesce(1).write.mode(
-        "append"
-    ).parquet(b_src)
-    q = interval_join_stream(spark, a_src, b_src, out, ckpt, join_type)
-    _await_or_raise(q)
+    out = two_pass(
+        spark, sf_dir, "t7_ijoin_",
+        {"a": a_rows.filter(F.col("recv_ts") <= split),
+         "b": b_rows.filter(F.col("recv_ts") <= split)},
+        {"a": a_rows.filter(F.col("recv_ts") > split),
+         "b": b_rows.filter(F.col("recv_ts") > split)},
+        lambda src, out, ckpt: interval_join_stream(
+            spark, os.path.join(src, "a"), os.path.join(src, "b"), out, ckpt,
+            join_type,
+        ),
+    )
     return spark.read.parquet(out).select(
         "a_id",
         "b_id",
@@ -1212,7 +1024,6 @@ def _interval_join_two_pass(
     )
 
 
-@_oracle_stream_conf
 def stream_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7, oracle-checked: the REAL stream-stream interval join run as two
     availableNow passes (see _interval_join_two_pass). The emitted union
@@ -1222,7 +1033,6 @@ def stream_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _interval_join_two_pass(spark, sf_dir, "inner")
 
 
-@_oracle_stream_conf
 def stream_interval_join_left_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7b: the leftOuter twin of stream_interval_join_query — same
     two-pass run, but unmatched A rows are emitted null-padded when the
@@ -1283,16 +1093,9 @@ def session_stream(
             "n_requests",
         )
     )
-    return (
-        sessions.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
+    return parquet_sink(sessions, out_dir, checkpoint_dir)
 
 
-@_oracle_stream_conf
 def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3c, oracle-checked: the REAL streaming session windows run as two
     availableNow passes (evens then odds, the stream_windowed split). The
@@ -1310,22 +1113,15 @@ def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is dropped iff recv_ts + gap <= w1 — a row below w1 but within
     the gap of it is KEPT and seeds state (probe-verified; it surfaces
     in the output only if its session closes by w2)."""
-    import os
-
     from ..sources.requests import requests_df
     from ..tables import EPOCH_NTZ
 
-    base = _scratch_dir("t3_session_")
-    src = os.path.join(base, "source")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     req = requests_df(spark, sf_dir)
-    req.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    q = session_stream(spark, src, out, ckpt)
-    _await_or_raise(q)
-    req.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    q = session_stream(spark, src, out, ckpt)
-    _await_or_raise(q)
+    out = two_pass(
+        spark, sf_dir, "t3_session_", req.filter(F.col("event_id") % 2 == 0),
+        req.filter(F.col("event_id") % 2 == 1),
+        lambda *dirs: session_stream(spark, *dirs),
+    )
     return spark.read.parquet(out).select(
         "uri",
         F.expr(

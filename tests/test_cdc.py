@@ -101,7 +101,9 @@ def test_snapshot_swap_crash_window_recovers(spark, tmp_path):
     from proxyhouse_spark.operators.cdc import (
         _TOTALS_SCHEMA,
         _merge_totals,
-        _snapshot_read,
+    )
+    from proxyhouse_spark.streaming.passes import (
+        read_snapshot as _snapshot_read,
     )
 
     snap = str(tmp_path / "snap")

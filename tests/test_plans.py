@@ -961,7 +961,7 @@ def test_partition_pruning_scan_reads_only_matching_directories(spark):
 
     registry.QUERIES["q_partition_pruning"](spark, SF_SMALL)
     # the op registers its scratch base in-process; take the newest s12
-    from proxyhouse_spark.streaming import pipeline
+    from proxyhouse_spark.streaming import passes as pipeline
 
     loc = next(
         os.path.join(d, "events_by_day")

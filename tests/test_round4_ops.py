@@ -1370,7 +1370,9 @@ def test_stream_extrema_lattice_survives_redelivery(spark, tmp_path):
     from proxyhouse_spark.operators.cdc import (
         _EXTREMA_SCHEMA,
         _merge_extrema,
-        _snapshot_read,
+    )
+    from proxyhouse_spark.streaming.passes import (
+        read_snapshot as _snapshot_read,
     )
 
     snap = str(tmp_path / "snap")

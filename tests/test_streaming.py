@@ -466,8 +466,10 @@ def test_watermark_boundary_pins(spark, dirs):
     """
     import datetime as dt
 
+    from proxyhouse_spark.streaming.passes import (
+        await_or_raise as _await_or_raise,
+    )
     from proxyhouse_spark.streaming.pipeline import (
-        _await_or_raise,
         dedup_stream,
         windowed_counts,
     )
