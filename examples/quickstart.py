@@ -86,13 +86,18 @@ def main() -> None:
 
     # -- 3+4. the flush loop: validate → keyed concat → rewrite → sink -------
     # One availableNow pass == one reference flush cycle (-syncsec analog is
-    # trigger_seconds for the long-running form). Inject a failure for the
-    # 'logs' key to demonstrate the DLQ path.
+    # trigger_seconds for the long-running form). The sender stands in for
+    # the forward host (sinks.http_sink.http_send POSTs for real): it
+    # returns {uri: delivered} and rejects the 'logs' key to demonstrate
+    # the DLQ path.
+    def send(frame):
+        return {r.uri: r.table_name != "logs"
+                for r in frame.select("uri", "table_name").collect()}
+
     storage = MetricStorage()
     pipe = FlushPipeline(
         spark, d["spool"], d["sink"], d["dlq"], d["ckpt"],
-        fail_predicate=F.col("table_name") == "logs",
-        metric_storage=storage,
+        sender=send, metric_storage=storage,
     )
     # await_or_raise fails loudly if the pass outlives the bound; a bare
     # awaitTermination(120) would return False and let the script read a

@@ -43,10 +43,13 @@ def _persistent_ids(sc) -> set[int]:
 
 
 def _unpersist(sc, ids: set[int]) -> None:
-    jmap = _jmap(sc)
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
+    # SparkContext.unpersistRDD, the call RDD.unpersist makes after logging
+    # its "was locally checkpointed, its lineage has been truncated" WARN:
+    # every freed generation is a checkpoint, so that line would print once
+    # per scope rebuild (once per flush trigger).
+    jsc = sc._jsc.sc()
+    for k in _persistent_ids(sc) & ids:
+        jsc.unpersistRDD(k, False)
 
 
 def scoped_checkpoint(df: DataFrame, scope: str) -> DataFrame:

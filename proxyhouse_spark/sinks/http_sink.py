@@ -43,8 +43,8 @@ def _send_rows(rows) -> Iterator[tuple[str, bool, int]]:
 
 def http_send(flush_frame: DataFrame) -> dict[str, bool]:
     """Deliver a sink frame (uri, target_url, buffer, ...) over HTTP.
-    Returns {key: delivered} — the caller (FlushPipeline) spills failures
-    to the DLQ exactly as for any other sink error.
+    Returns {key: delivered}, the sender contract of FlushPipeline and
+    replay_dlq: the caller spills (or re-queues) every undelivered key.
 
     The status key is ``packet_id`` when the frame carries one (the DLQ
     replay path, where distinct packets share a uri and a uri-keyed dict
@@ -64,7 +64,8 @@ def http_send(flush_frame: DataFrame) -> dict[str, bool]:
 
 # NOTE: the DLQ replay path (streaming/pipeline.py replay_dlq) calls
 # http_send per chunk for executor-side delivery — replay pacing lives in the
-# driver loop (chunked + throttled), but payload bytes never leave the
-# executors. The old http_send_driver (collect rows, send from the
-# driver) was removed for exactly that reason (VERDICT r3 #6).
+# driver loop (one packet per send when throttled, else one send for the
+# queue), but payload bytes never leave the executors. The old
+# http_send_driver (collect rows, send from the driver) was removed for
+# exactly that reason (VERDICT r3 #6).
 # As in the flush, each POST of a chunk opens its own connection.

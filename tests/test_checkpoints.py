@@ -43,3 +43,45 @@ def test_scopes_are_independent(spark):
 
 def test_release_unknown_scope_is_noop(spark):
     release_scope(spark, "never_created")
+
+
+_FREE_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from proxyhouse_spark.checkpoints import _generations, _persistent_ids, scoped_checkpoint
+from proxyhouse_spark.session import get_spark
+
+spark = get_spark("checkpoint_free")  # log level WARN, as every engine session
+freed = []
+for n in (3, 4, 5):
+    freed += _generations.get("s", [])
+    scoped_checkpoint(spark.range(n), "s")
+print(json.dumps({"freed": freed,
+                  "live": sorted(_persistent_ids(spark.sparkContext))}))
+spark.stop()
+"""
+
+
+def test_freeing_a_generation_logs_no_lineage_warning():
+    """Freeing a scope's previous generation must not print Spark's "RDD N
+    was locally checkpointed, its lineage has been truncated" WARN, which
+    RDD.unpersist logs for every checkpointed RDD — once per flush trigger
+    in a running stream. A small-heap session in a subprocess (its own
+    stderr) rebuilds one scope three times; the two freed generations must
+    have left getPersistentRDDs() without that line."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="512m")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FREE_SCRIPT, repo],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(out["freed"]) >= 2  # two generations were freed
+    assert not set(out["freed"]) & set(out["live"])
+    assert "was locally checkpointed" not in proc.stderr

@@ -111,32 +111,42 @@ def test_http_replay_is_executor_side_ordered_and_chunked(
     """Replay sends payloads from EXECUTOR tasks via the same partition
     sender as the flush path (no buffer bytes through the driver —
     VERDICT r3 #6), while the driver keeps the reference's sequential
-    pacing: default chunk size 1, (level, created_ns) order."""
+    pacing in (level, created_ns) order: unthrottled, one single-task send
+    covers the queue; throttled, each send is one packet."""
     from proxyhouse_spark.streaming.pipeline import replay_dlq
 
-    dlq = str(tmp_path / "dlq")
-    sink = str(tmp_path / "sink")
     cols = "uri string, body string, level int, created_ns bigint"
-    spark.createDataFrame(
-        [
-            ("/?query=c", "(3)", 2, 100),  # level 2 → third
-            ("/?query=a", "(1)", 0, 200),  # level 0 → first
-            ("/?query=b", "(2)", 0, 300),  # level 0, later ns → second
-        ],
-        cols,
-    ).coalesce(1).write.parquet(dlq)
+    for throttle, n_sends in ((0, 1), (0.01, 3)):
+        dlq = str(tmp_path / f"dlq{n_sends}")
+        sink = str(tmp_path / f"sink{n_sends}")
+        spark.createDataFrame(
+            [
+                ("/?query=c", "(3)", 2, 100),  # level 2 → third
+                ("/?query=a", "(1)", 0, 200),  # level 0 → first
+                ("/?query=b", "(2)", 0, 300),  # level 0, later ns → second
+            ],
+            cols,
+        ).coalesce(1).write.parquet(dlq)
+        _Collector.received = []
+        sends = []
 
-    _Collector.fail_substring = "\x00never"
-    try:
-        counts = replay_dlq(
-            spark, dlq, sink, sender=http_send, fwd=http_server
-        )
-    finally:
-        _Collector.fail_substring = "bad"
-    assert counts == {"replayed": 3, "requeued": 0, "quarantined": 0}
-    # delivery order matches the reference's lexicographic replay order
-    assert [b for _, b in _Collector.received] == ["(1)", "(2)", "(3)"]
-    assert spark.read.parquet(dlq).count() == 0
+        def counting_send(chunk):
+            sends.append(chunk)
+            return http_send(chunk)
+
+        _Collector.fail_substring = "\x00never"
+        try:
+            counts = replay_dlq(
+                spark, dlq, sink, sender=counting_send,
+                throttle_seconds=throttle, fwd=http_server,
+            )
+        finally:
+            _Collector.fail_substring = "bad"
+        assert counts == {"replayed": 3, "requeued": 0, "quarantined": 0}
+        # delivery order matches the reference's lexicographic replay order
+        assert [b for _, b in _Collector.received] == ["(1)", "(2)", "(3)"]
+        assert spark.read.parquet(dlq).count() == 0
+        assert len(sends) == n_sends
 
 
 def test_http_replay_same_uri_packets_keep_distinct_outcomes(

@@ -74,10 +74,11 @@ def test_rotation_leads_with_stale_weak_then_oldest_records():
     conversion), then fill with the OLDEST-record keys so every record's
     age stays bounded instead of young keys re-cycling."""
     import glob
-    import json
 
-    keys = list(registry.QUERIES)
-    _, _, latest = registry._gate_results()
+    import __spark_entry__ as entrymod
+
+    keys = list(entrymod.queries())
+    _, _, latest = entrymod._gate_results()
 
     # the converted twins lead the window
     stale_weak = {

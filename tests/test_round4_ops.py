@@ -3591,7 +3591,7 @@ def test_er_minenc_guard_bounds(spark):
     fail loudly (not silently corrupt the argmin) when a doc id reaches
     10^10 or a distance would overflow the BIGINT packing."""
     import pytest
-    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
 
     from proxyhouse_spark.operators.dedup import ER_ENC, _er_minenc_sql
 
@@ -3600,7 +3600,9 @@ def test_er_minenc_guard_bounds(spark):
     ).collect()[0].k
     assert ok == 3 * ER_ENC + 42
     for dist, dst in (("1", str(ER_ENC)), ("1000000000", "1"), ("-1", "1")):
-        with pytest.raises((Py4JJavaError, Exception)):
+        with pytest.raises(
+            SparkRuntimeException, match="er_links min-encode out of range"
+        ):
             spark.sql(f"SELECT {_er_minenc_sql(dist, dst)} AS k").collect()
 
 

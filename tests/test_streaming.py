@@ -27,10 +27,20 @@ def dirs(tmp_path):
     return d
 
 
-def _run_pipeline(spark, dirs, fail_predicate=None):
+def _failing(fail):
+    """A sender (the production delivery contract) whose downstream
+    rejects every key or packet ``fail`` selects (non-200,
+    main.go:423-425)."""
+    def send(frame):
+        key = "packet_id" if "packet_id" in frame.columns else "uri"
+        return {k: not bad for k, bad in frame.select(key, fail).collect()}
+    return send
+
+
+def _run_pipeline(spark, dirs, fail):
     pipe = FlushPipeline(
         spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"],
-        fail_predicate=fail_predicate,
+        sender=_failing(fail),
     )
     q = pipe.start(available_now=True)
     q.awaitTermination(120)
@@ -58,7 +68,7 @@ def test_flush_one_row_per_key_per_batch(spark, dirs):
 def test_failed_keys_spill_to_dlq_at_level_1(spark, dirs):
     reqs = [_req(1, "good", "(1)"), _req(2, "bad", "(2)")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
-    _run_pipeline(spark, dirs, fail_predicate=F.col("table_name") == "bad")
+    _run_pipeline(spark, dirs, F.col("table_name") == "bad")
     sink = spark.read.parquet(dirs["sink"])
     assert sink.count() == 1 and sink.first().table_name == "good"
     dlq = spark.read.parquet(dirs["dlq"])
@@ -70,7 +80,7 @@ def test_failed_keys_spill_to_dlq_at_level_1(spark, dirs):
 def test_replay_delivers_and_clears_queue(spark, dirs):
     reqs = [_req(1, "bad", "(1)")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
-    _run_pipeline(spark, dirs, fail_predicate=F.lit(True))
+    _run_pipeline(spark, dirs, F.lit(True))
     counts = replay_dlq(spark, dirs["dlq"], dirs["sink"])  # sink healthy again
     assert counts == {"replayed": 1, "requeued": 0, "quarantined": 0}
     replayed = spark.read.parquet(dirs["sink"] + "/replayed")
@@ -83,10 +93,12 @@ def test_replay_escalates_then_quarantines(spark, dirs):
     quarantined and never replayed again (max 10 retries, main.go:366-369)."""
     reqs = [_req(1, "poison", "(1)")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
-    _run_pipeline(spark, dirs, fail_predicate=F.lit(True))
+    _run_pipeline(spark, dirs, F.lit(True))
 
     for expected_level in range(2, MAX_LEVEL + 1):
-        counts = replay_dlq(spark, dirs["dlq"], dirs["sink"], fail_predicate=F.lit(True))
+        counts = replay_dlq(
+            spark, dirs["dlq"], dirs["sink"], sender=_failing(F.lit(True))
+        )
         dlq = spark.read.parquet(dirs["dlq"])
         assert dlq.first().level == expected_level
         if expected_level == MAX_LEVEL:
@@ -373,6 +385,36 @@ def test_send_duration_times_the_sender(spark, dirs):
     assert pipe.metrics[0]["requests_sent"] == 2
     assert spark.read.parquet(dirs["sink"]).count() == 2
     assert not os.path.exists(dirs["dlq"])  # all delivered: nothing spilled
+
+
+def test_flush_checkpoint_scope_is_per_pipeline(spark, tmp_path):
+    """Each pipeline checkpoints its flush frame under its own scope: a
+    trigger of pipeline B landing while A's frame is live (here: from
+    inside A's sender) must not free A's blocks. Under one shared scope,
+    A's split and sink write then read freed blocks and fail."""
+    def make(name, reqs, sender):
+        d = {k: str(tmp_path / name / k) for k in ("source", "sink", "dlq", "ckpt")}
+        spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(d["source"])
+        pipe = FlushPipeline(
+            spark, d["source"], d["sink"], d["dlq"], d["ckpt"], sender=sender
+        )
+        return pipe, spark.read.parquet(d["source"]), d
+
+    pipe_b, batch_b, dirs_b = make("b", [_req(9, "other", "(9)")], _failing(F.lit(False)))
+    fail_bad = _failing(F.col("table_name") == "bad")
+
+    def sender_a(frame):
+        statuses = fail_bad(frame)
+        pipe_b._flush(batch_b, 0)  # B's trigger, before A's send returns
+        return statuses
+
+    pipe_a, batch_a, dirs_a = make(
+        "a", [_req(1, "good", "(1)"), _req(2, "bad", "(2)")], sender_a
+    )
+    pipe_a._flush(batch_a, 0)
+    assert [r.table_name for r in spark.read.parquet(dirs_a["sink"]).collect()] == ["good"]
+    assert [r.body for r in spark.read.parquet(dirs_a["dlq"]).collect()] == ["(2)"]
+    assert [r.table_name for r in spark.read.parquet(dirs_b["sink"]).collect()] == ["other"]
 
 
 def test_graphite_metrics_match_metric_counters(spark, dirs):
@@ -851,7 +893,7 @@ def test_replay_crash_recovery_merges_old_with_new_spills(spark, tmp_path):
     ).coalesce(1).write.parquet(dlq)
 
     counts = replay_dlq(
-        spark, dlq, sink, fail_predicate=F.lit(True)  # everything fails
+        spark, dlq, sink, sender=_failing(F.lit(True))  # everything fails
     )
     # both generations survived: both packets escalated one level
     assert counts["requeued"] == 2

@@ -1,13 +1,13 @@
 """Preview the driver's next correctness-sample window.
 
 The round driver samples the FIRST 50 keys of ``__spark_entry__.queries()``
-in dict order into CORRECTNESS_r{N}.json. ``registry._rotated()`` re-keys
-the dict at import time from the CORRECTNESS_r*.json files present at the
-repo root: gate-FAILED keys first (re-verify fixes), then never-confirmed
-lead/rest, then confirmed. This tool prints that projected window plus the
-coverage ledger, so a session can sanity-check rotation health before the
-driver snapshot (e.g. after dropping in a new CORRECTNESS file or editing
-registry._LEAD).
+in dict order into CORRECTNESS_r{N}.json. ``__spark_entry__._rotated()``
+orders the keys from the CORRECTNESS_r*.json files present at the repo
+root: gate-FAILED keys first (re-verify fixes), then stale rows-only
+records, never-confirmed keys, and confirmed keys oldest record first. This
+tool prints that projected window plus the coverage ledger, so rotation
+health can be checked before the next sample (e.g. after dropping in a
+new CORRECTNESS file).
 
 Usage: python tools/window_preview.py [--n 50]
 """
@@ -26,10 +26,9 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from proxyhouse_spark.registry import _gate_results
 
     keys = list(entrymod.queries())
-    passed, failed, _latest = _gate_results()
+    passed, failed, _latest = entrymod._gate_results()
     sampled = passed | set(failed)
 
     window = keys[: args.n]
