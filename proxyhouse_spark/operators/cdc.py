@@ -152,7 +152,7 @@ def snapshot_diff_oracle() -> str:
 # one big batch apply — which is exactly what q_stream_cdc proves
 # through the differential gate (two real availableNow passes, oracle =
 # the batch apply SQL). Snapshot rewrite is repartition(key-bucket) +
-# tmp-dir + atomic rename (the replay_dlq recipe); at scale the rewrite
+# tmp-dir + atomic rename (streaming/passes.py); at scale the rewrite
 # is a co-located write when the snapshot is bucketed by the key.
 # ---------------------------------------------------------------------------
 

@@ -1,4 +1,5 @@
-"""Small-file compaction for streaming sink / DLQ directories.
+"""Small-file compaction for streaming sink / DLQ directories, and the one
+rule both the compaction and the DLQ replay use to rewrite a directory.
 
 Every micro-batch flush appends at least one parquet file per partition
 (FlushPipeline, DLQ spill, replay rewrites), so a long-running stream turns
@@ -10,42 +11,63 @@ footer reads, and listing all go O(files). The reference never hits this
 replaces filename magic with columns (SURVEY §2.1 S4) inherits the problem
 and needs the standard fix: periodic bin-packed rewrite.
 
-``compact_parquet`` reads the directory, repartitions to
-``ceil(total_bytes / target_bytes)`` output files, writes to a temp dir
-beside the target, then swaps atomically (rename old → tombstone, temp →
-live, drop tombstone). Readers between the two renames see the directory
-missing rather than half-written — the same crash-consistency contract a
-transactional table format provides, minus the format dependency. The swap
-window is the trade for zero dependencies; a production deployment on
-Delta/Iceberg replaces this file dance with OPTIMIZE/rewrite_data_files.
+A rewrite lists the directory's parquet files once, reads only those, and
+finishes through ``replace_files``: it APPENDS the rewritten frame into the
+same directory, then deletes exactly the files it read (the reference's
+order: spill the resend first, then delete the file that was read,
+main.go:479-482). Files another writer appends meanwhile (a flush spill)
+are not in the list, so they are neither read nor deleted; the next pass
+takes them. Two appends into one directory at the same moment share
+Spark's ``_temporary`` staging directory, and one of them can fail; a
+rewrite whose append fails stops before its deletes. A kill at any point leaves the read files beside (part of) the
+new generation — duplicates of that pass's rows, which the at-least-once
+contract allows — and never a loss, with no recovery step on restart.
+Readers between the append and the last delete see those duplicates; a
+production deployment on Delta/Iceberg replaces this with
+OPTIMIZE/rewrite_data_files. Directories are flat (the DLQ and the
+unpartitioned sink layout): a partitioned sink's subdirectories are not
+listed, so it is left as is.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # one HDFS-ish block per file
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+def parquet_files(path: str) -> list[str]:
+    """The committed parquet files directly under ``path``, as full paths
+    (Spark's own rule: names starting with ``_`` or ``.`` are hidden)."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        os.path.join(path, f)
+        for f in names
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 def parquet_file_count(path: str) -> int:
-    return sum(
-        f.endswith(".parquet")
-        for _root, _dirs, files in os.walk(path)
-        for f in files
-    )
+    return len(parquet_files(path))
+
+
+def replace_files(frame: DataFrame, path: str, files: list[str]) -> None:
+    """Append ``frame`` into ``path``, then delete ``files`` — the parquet
+    files ``frame`` was read from — and their ``.crc`` sidecars."""
+    frame.write.mode("append").parquet(path)
+    for f in files:
+        head, name = os.path.split(f)
+        for p in (f, os.path.join(head, f".{name}.crc")):
+            try:
+                os.remove(p)
+            except FileNotFoundError:
+                pass
 
 
 def compact_parquet(
@@ -56,30 +78,23 @@ def compact_parquet(
     Returns ``{"files_before": n, "files_after": m, "rows": r}``. No-op
     (beyond a read) when the directory already meets the target count.
     """
-    files_before = parquet_file_count(path)
-    n_out = max(1, math.ceil(_dir_bytes(path) / target_bytes))
-    if files_before <= n_out:
+    files = parquet_files(path)
+    n_out = max(1, math.ceil(sum(map(os.path.getsize, files)) / target_bytes))
+    if len(files) <= n_out:
         return {
-            "files_before": files_before,
-            "files_after": files_before,
+            "files_before": len(files),
+            "files_after": len(files),
             "rows": -1,
         }
 
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(*files)
     rows = df.count()
-    tmp = path.rstrip("/") + ".compact.tmp"
-    old = path.rstrip("/") + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
     # repartition (round-robin), not coalesce: coalesce(n) would also narrow
     # the READ stage to n tasks; repartition keeps the scan wide and only
     # the write narrow
-    df.repartition(n_out).write.parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    replace_files(df.repartition(n_out), path, files)
     return {
-        "files_before": files_before,
+        "files_before": len(files),
         "files_after": parquet_file_count(path),
         "rows": rows,
     }

@@ -28,6 +28,13 @@ delivery, so every key is delivered. The replay's chunk size follows its
 ``throttle_seconds``: one packet per send when it pauses between sends,
 else one send for the whole queue.
 
+The replay rewrites the queue by the reference's order — spill the
+resend, then delete the file that was read (main.go:479-482) — through
+``sinks.compact.replace_files``: a pass reads only the parquet files it
+listed, appends the new generation beside them, then deletes exactly those
+files. A packet a flush spills during the pass stays queued for the next
+one, and a kill at any point leaves duplicates, never a loss.
+
 Delivery semantics: the reference acks clients on buffer (data-loss window
 before flush, main.go:198-218) and is at-least-once downstream with
 possible duplicates (main.go:423-441). This pipeline upgrades the ack-loss
@@ -39,7 +46,6 @@ an idempotent consumer can dedupe on (batch_id, uri).
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from collections.abc import Callable
 
@@ -47,10 +53,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from ..checkpoints import scoped_checkpoint
+from .. import checkpoints
+from ..checkpoints import release_scope, scoped_checkpoint
 from ..functions.scalars import url_rewrite
 from ..operators.dlq import MAX_LEVEL
 from ..operators.ingest import FWD_HOST, REPL_HOST, sink_frame
+from ..sinks.compact import parquet_files, replace_files
 from ..sinks.graphite import PREFIX_AVG, PREFIX_CNT, MetricStorage
 from .passes import parquet_sink, scratch_dir, two_pass
 
@@ -222,67 +230,70 @@ class FlushPipeline:
         # The frame is one row per distinct key, so materializing it for the
         # send mirrors the reference's sequential flush loop (main.go:290-293)
         # while the sends themselves run executor-side; send, split and write
-        # then read one compute. Scoped: a streaming query checkpoints one
-        # flush frame per micro-batch — without freeing the previous batch's
-        # blocks this leaks for the stream's lifetime (see checkpoints.py).
-        # The scope is per pipeline (Spark runs one query per checkpoint
-        # dir), so another pipeline's trigger never frees this frame. The
-        # key count rides the checkpoint (observe), so no job probes the
-        # spill below.
+        # then read one compute. The scope is per pipeline (Spark runs one
+        # query per checkpoint dir), so another pipeline's trigger never
+        # frees this frame, and it is released when the trigger ends: no
+        # checkpoint outlives its trigger or the query. The key count rides
+        # the checkpoint (observe), so no job probes the spill below.
+        scope = "flush_frame:" + self.checkpoint_dir
         keys_obs = Observation()
         grouped = scoped_checkpoint(
             sink_frame(batch_df, self.fwd, self.repl)
             .withColumn("batch_id", F.lit(batch_id))
             .observe(keys_obs, F.count(F.lit(1)).alias("keys")),
-            "flush_frame:" + self.checkpoint_dir,
+            scope,
         )
-        # sendDuration times the HTTP send, as the reference does
-        # (main.go:426); without a sender, the sink write below is the send
-        send_start = time.monotonic()
-        statuses = None if self.sender is None else self.sender(grouped)
-        send_ms = int((time.monotonic() - send_start) * 1000)
-        n_keys = keys_obs.get["keys"]
-        ok, failed = _split_by_statuses(grouped, statuses, n_rows=n_keys)
-        obs = Observation()
-        ok = ok.observe(
-            obs,
-            F.count(F.lit(1)).alias("requests_sent"),
-            F.coalesce(F.sum("rowcount"), F.lit(0)).alias("rows_sent"),
-            F.coalesce(F.sum(F.length("buffer")), F.lit(0)).alias("bytes_sent"),
-        )
-        # One output file per flush mirrors "few large requests": the frame
-        # is tiny (one row per distinct uri), so coalesce(1) costs nothing.
-        writer = ok.coalesce(1).write.mode("append")
-        if self.partition_by_table:
-            writer = writer.partitionBy("table_name")
-        write_start = time.monotonic()
-        writer.parquet(self.sink_dir)
-        if self.sender is None:
-            send_ms = int((time.monotonic() - write_start) * 1000)
-        m = {"batch_id": batch_id, **obs.get}
-        self.metrics.append(m)
-        if self.metric_storage is not None:
-            # sent-side increments, aggregated per flush (main.go:394-405,
-            # 426-428; same totals as the reference's per-send calls)
-            self.metric_storage.increment(
-                f"{PREFIX_CNT}.requests_sent", m["requests_sent"]
+        try:
+            # sendDuration times the HTTP send, as the reference does
+            # (main.go:426); without a sender, the sink write below is the send
+            send_start = time.monotonic()
+            statuses = None if self.sender is None else self.sender(grouped)
+            send_ms = int((time.monotonic() - send_start) * 1000)
+            n_keys = keys_obs.get["keys"]
+            ok, failed = _split_by_statuses(grouped, statuses, n_rows=n_keys)
+            obs = Observation()
+            ok = ok.observe(
+                obs,
+                F.count(F.lit(1)).alias("requests_sent"),
+                F.coalesce(F.sum("rowcount"), F.lit(0)).alias("rows_sent"),
+                F.coalesce(F.sum(F.length("buffer")), F.lit(0)).alias("bytes_sent"),
             )
-            self.metric_storage.increment(f"{PREFIX_CNT}.rows_sent", m["rows_sent"])
-            self.metric_storage.increment(f"{PREFIX_CNT}.bytes_sent", m["bytes_sent"])
-            self.metric_storage.increment(f"{PREFIX_AVG}.bytes_sent", m["bytes_sent"])
-            self.metric_storage.increment("bytesSent", m["bytes_sent"])
-            self.metric_storage.increment("sendDuration", send_ms)
-        if n_keys > m["requests_sent"]:  # failed keys = keys − delivered keys
-            failed.select(
-                F.col("uri"),
-                F.col("buffer").alias("body"),
-                F.lit(1).cast("int").alias("level"),  # first failure → level 1 (main.go:441)
-                (F.unix_micros(F.current_timestamp()) * 1000).alias("created_ns"),
-            ).coalesce(1).write.mode("append").parquet(self.dlq_dir)
+            # One output file per flush mirrors "few large requests": the frame
+            # is tiny (one row per distinct uri), so coalesce(1) costs nothing.
+            writer = ok.coalesce(1).write.mode("append")
+            if self.partition_by_table:
+                writer = writer.partitionBy("table_name")
+            write_start = time.monotonic()
+            writer.parquet(self.sink_dir)
+            if self.sender is None:
+                send_ms = int((time.monotonic() - write_start) * 1000)
+            m = {"batch_id": batch_id, **obs.get}
+            self.metrics.append(m)
+            if self.metric_storage is not None:
+                # sent-side increments, aggregated per flush (main.go:394-405,
+                # 426-428; same totals as the reference's per-send calls)
+                self.metric_storage.increment(
+                    f"{PREFIX_CNT}.requests_sent", m["requests_sent"]
+                )
+                self.metric_storage.increment(f"{PREFIX_CNT}.rows_sent", m["rows_sent"])
+                self.metric_storage.increment(f"{PREFIX_CNT}.bytes_sent", m["bytes_sent"])
+                self.metric_storage.increment(f"{PREFIX_AVG}.bytes_sent", m["bytes_sent"])
+                self.metric_storage.increment("bytesSent", m["bytes_sent"])
+                self.metric_storage.increment("sendDuration", send_ms)
+            if n_keys > m["requests_sent"]:  # failed keys = keys − delivered keys
+                failed.select(
+                    F.col("uri"),
+                    F.col("buffer").alias("body"),
+                    F.lit(1).cast("int").alias("level"),  # first failure → level 1 (main.go:441)
+                    (F.unix_micros(F.current_timestamp()) * 1000).alias("created_ns"),
+                ).coalesce(1).write.mode("append").parquet(self.dlq_dir)
+        finally:
+            release_scope(self.spark, scope)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
-        schema = self.spark.read.parquet(self.source_dir).schema
-        stream = self.spark.readStream.schema(schema).parquet(self.source_dir)
+        from ..sources.requests import requests_stream_df
+
+        stream = requests_stream_df(self.spark, self.source_dir)
         if self.metric_storage is not None:
             # received-side counters (main.go:209-216: accepted inserts
             # only) ride the micro-batch as observed metrics; a
@@ -345,47 +356,38 @@ def replay_dlq(
     is a single-task send in (level, created_ns) order, and nothing
     eligible means no send.
 
-    Spark jobs of one pass (AQE runs each shuffle or cache stage as a job
-    of its own):
+    The queue is rewritten by the one rule of ``sinks.compact.replace_files``:
+    the pass lists the queue's parquet files once and reads only those,
+    appends the new generation (escalated failures and quarantined packets)
+    into ``dlq_dir``, then deletes exactly the files it read. A packet a
+    live flush spills during the pass is in none of those files, so it is
+    neither sent, nor counted as delivered, nor deleted; the next pass
+    takes it. A kill at any point leaves duplicates of this pass's packets
+    (re-sent next pass — at-least-once, the delivery contract; loss is not)
+    and needs no recovery step. A ``<dlq>.old`` directory stranded by the
+    earlier rename swap is no longer read: move its parquet files into
+    ``dlq_dir`` once.
+
+    Spark jobs of one pass (AQE runs each shuffle stage as a job of its
+    own):
 
     - the DLQ read's schema inference;
-    - the replay sequence (window + cache), with ``count`` for the chunk loop;
+    - the replay sequence (window + local checkpoint), whose row count
+      rides the checkpoint (``observe``);
     - one send per chunk — the only Python-worker tasks;
     - the ``replayed/`` append, only when a packet was delivered;
-    - the queue rewrite; ``requeued`` and ``quarantined`` ride it as
-      ``observe()`` metrics, and ``replayed`` is the sum of the statuses.
+    - the new generation's append; ``requeued`` and ``quarantined`` ride it
+      as ``observe()`` metrics, and ``replayed`` is the sum of the statuses.
 
     The delivery-status broadcast (a JVM-local Arrow relation) adds one job
     to each write only when some packets were delivered and others not.
 
     Returns counters {replayed, requeued, quarantined} (the reference's
     Graphite metrics analog)."""
-    # Crash recovery: a kill between the two swap renames below leaves the
-    # previous queue generation at .old. MERGE it back rather than
-    # restore-if-empty: the flush pipeline's spill APPENDS can recreate
-    # dlq_dir with fresh packets before the next replay runs, and a
-    # rename-only recovery would then skip the restore and the swap's
-    # pre-clean would delete every pre-crash packet (data loss). Parquet
-    # part files carry UUID names, so moving .old's files in never
-    # collides; duplicates-on-replay are fine (at-least-once is the
-    # delivery contract, loss is not — batch_id dedupe is downstream's
-    # documented job).
-    _old = dlq_dir.rstrip("/") + ".old"
-    if os.path.isdir(_old):
-        if not os.path.isdir(dlq_dir):
-            os.rename(_old, dlq_dir)
-        else:
-            for f in os.listdir(_old):
-                if not f.startswith("_"):
-                    os.rename(
-                        os.path.join(_old, f), os.path.join(dlq_dir, f)
-                    )
-            shutil.rmtree(_old, ignore_errors=True)
-    if not os.path.isdir(dlq_dir) or not os.listdir(dlq_dir):
+    files = parquet_files(dlq_dir)
+    if not files:
         return {"replayed": 0, "requeued": 0, "quarantined": 0}
-    # No cache: every read below runs before the swap renames, against the
-    # file list fixed when the frame is created.
-    dlq = spark.read.parquet(dlq_dir)
+    dlq = spark.read.parquet(*files)
     eligible = dlq.filter(F.col("level") < MAX_LEVEL)
     quarantined = dlq.filter(F.col("level") >= MAX_LEVEL)
 
@@ -397,78 +399,78 @@ def replay_dlq(
     # per-packet delivery identity: distinct packets share a uri, so a
     # uri-keyed status dict would collapse them (a failed packet could
     # inherit a later same-uri success and vanish from the queue).
-    seqd = (
+    # Numbered ONCE, into a local checkpoint: a cached plan would be
+    # re-cached by any append under dlq_dir (a spill, or this pass's own
+    # new generation) and renumber its (level, created_ns) ties, so the
+    # statuses would land on the wrong packets. Called through the module:
+    # the traced benchmark times the flush's aggregation by wrapping the
+    # name ``scoped_checkpoint`` in this module.
+    scope = "replay_queue:" + dlq_dir
+    seq_obs = Observation()
+    seqd = checkpoints.scoped_checkpoint(
         eligible.withColumn(
             "seq", F.row_number().over(Window.orderBy("level", "created_ns"))
         )
         .withColumn("packet_id", F.col("seq").cast("string"))
         .withColumn("target_url", url_rewrite(F.col("uri"), fwd, repl))
         .withColumn("buffer", F.col("body"))
-        .cache()
+        .observe(seq_obs, F.count(F.lit(1)).alias("eligible")),
+        scope,
     )
-    n_eligible = seqd.count()
-    statuses: dict[str, bool] | None = None
-    if sender is not None:
-        statuses = {}
-        size = 1 if throttle_seconds > 0 else max(n_eligible, 1)
-        for start in range(1, n_eligible + 1, size):
-            chunk = (
-                seqd.filter(F.col("seq").between(start, start + size - 1))
-                .select("seq", "packet_id", "uri", "target_url", "buffer", "level")
-                .coalesce(1)  # one task → in-order send
-                .sortWithinPartitions("seq")
-            )
-            statuses.update(sender(chunk))
-            if throttle_seconds > 0 and start < n_eligible:
-                time.sleep(throttle_seconds)
-    # the statuses hold every outcome: no job counts the delivered rows
-    n_replayed = n_eligible if statuses is None else sum(statuses.values())
-    ok, failed = _split_by_statuses(
-        seqd, statuses, key="packet_id", n_rows=n_eligible
-    )
-    helper = ["seq", "packet_id", "target_url", "buffer"]
-    ok, failed = ok.drop(*helper), failed.drop(*helper)
-    delivered = ok.select(
-        "uri",
-        F.col("body").alias("buffer"),
-        F.lit(-1).cast("bigint").alias("rowcount"),  # replay reports rowcount=1 in the
-        # reference (main.go:479) — we mark replayed rows -1 instead of lying
-        F.lit(-1).cast("bigint").alias("batch_id"),
-    )
-    # An unconditional write is NOT equivalent: an empty append still
-    # creates a zero-row part file, which the quarantine contract forbids
-    # (test_streaming.py pins no parquet under replayed/ when nothing ships).
-    if n_replayed:
-        delivered.coalesce(1).write.mode("append").parquet(
-            os.path.join(sink_dir, "replayed")
+    try:
+        n_eligible = seq_obs.get["eligible"]
+        statuses: dict[str, bool] | None = None
+        if sender is not None:
+            statuses = {}
+            size = 1 if throttle_seconds > 0 else max(n_eligible, 1)
+            for start in range(1, n_eligible + 1, size):
+                chunk = (
+                    seqd.filter(F.col("seq").between(start, start + size - 1))
+                    .select("seq", "packet_id", "uri", "target_url", "buffer", "level")
+                    .coalesce(1)  # one task → in-order send
+                    .sortWithinPartitions("seq")
+                )
+                statuses.update(sender(chunk))
+                if throttle_seconds > 0 and start < n_eligible:
+                    time.sleep(throttle_seconds)
+        # the statuses hold every outcome: no job counts the delivered rows
+        n_replayed = n_eligible if statuses is None else sum(statuses.values())
+        ok, failed = _split_by_statuses(
+            seqd, statuses, key="packet_id", n_rows=n_eligible
         )
+        helper = ["seq", "packet_id", "target_url", "buffer"]
+        ok, failed = ok.drop(*helper), failed.drop(*helper)
+        delivered = ok.select(
+            "uri",
+            F.col("body").alias("buffer"),
+            F.lit(-1).cast("bigint").alias("rowcount"),  # replay reports rowcount=1 in the
+            # reference (main.go:479) — we mark replayed rows -1 instead of lying
+            F.lit(-1).cast("bigint").alias("batch_id"),
+        )
+        # An unconditional write is NOT equivalent: an empty append still
+        # creates a zero-row part file, which the quarantine contract forbids
+        # (test_streaming.py pins no parquet under replayed/ when nothing ships).
+        if n_replayed:
+            delivered.coalesce(1).write.mode("append").parquet(
+                os.path.join(sink_dir, "replayed")
+            )
 
-    escalated = failed.withColumn("level", (F.col("level") + 1).cast("int"))
-    # requeued/quarantined ride the queue rewrite below (observe), not
-    # count jobs of their own
-    obs = Observation()
-    new_dlq = escalated.unionByName(quarantined).observe(
-        obs,
-        F.count(F.when(F.col("level") < MAX_LEVEL, 1)).alias("requeued"),
-        F.count(F.when(F.col("level") >= MAX_LEVEL, 1)).alias("quarantined"),
-    )
-    # rewrite the queue: tmp-dir + two-rename swap (the pudge-file delete
-    # analog, crash-safe: rmtree-then-rename has a window that destroys
-    # the queue outright — the sinks/compact.py swap discipline instead).
-    # repartition by level (not coalesce(1)) so a large queue rewrites in
-    # parallel, one writer per retry level; layout stays flat so spill
-    # appends and partition discovery keep working.
-    tmp = dlq_dir.rstrip("/") + ".tmp"
-    new_dlq.repartition("level").write.mode("overwrite").parquet(tmp)
-    counts = {"replayed": n_replayed, **obs.get}
-    seqd.unpersist()  # ok/failed derive from it — keep cached until here
-    old = dlq_dir.rstrip("/") + ".old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(dlq_dir, old)
-    os.rename(tmp, dlq_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return counts
+        escalated = failed.withColumn("level", (F.col("level") + 1).cast("int"))
+        # requeued/quarantined ride the new generation's append (observe),
+        # not count jobs of their own
+        obs = Observation()
+        new_dlq = escalated.unionByName(quarantined).observe(
+            obs,
+            F.count(F.when(F.col("level") < MAX_LEVEL, 1)).alias("requeued"),
+            F.count(F.when(F.col("level") >= MAX_LEVEL, 1)).alias("quarantined"),
+        )
+        # repartition by level (not coalesce(1)) so a large queue rewrites in
+        # parallel, one writer per retry level; layout stays flat so spill
+        # appends and partition discovery keep working.
+        replace_files(new_dlq.repartition("level"), dlq_dir, files)
+        return {"replayed": n_replayed, **obs.get}
+    finally:
+        release_scope(spark, scope)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,9 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from proxyhouse_spark.session import get_spark  # noqa: E402
 

@@ -32,6 +32,7 @@ read or written.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pytest
@@ -39,7 +40,7 @@ import pytest
 
 @pytest.fixture
 def bench(monkeypatch, tmp_path):
-    monkeypatch.syspath_prepend("/root/repo")
+    monkeypatch.syspath_prepend(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench as bench_mod
 
     monkeypatch.setattr(bench_mod, "get_spark", lambda name: object())

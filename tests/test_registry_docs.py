@@ -1,13 +1,16 @@
 """Docs ↔ registry drift guard (r2 verdict: README said 102 while the
 registry had 104 — make the count impossible to get wrong silently)."""
 
+import os
 import re
 
 from proxyhouse_spark import registry
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_readme_counts_match_registry():
-    text = open("/root/repo/README.md", encoding="utf-8").read()
+    text = open(os.path.join(REPO, "README.md"), encoding="utf-8").read()
     m = re.search(r"(\d+) registered queries, (\d+) DuckDB-oracle-checked", text)
     assert m, "README must state the registry counts in the standard phrasing"
     assert int(m.group(1)) == len(registry.QUERIES), (
@@ -38,8 +41,8 @@ def test_every_query_is_documented():
     an operator the docs don't mention is an operator the judge (and a
     user) can't find. Complements the count guard with a per-name one."""
     text = (
-        open("/root/repo/SURVEY.md", encoding="utf-8").read()
-        + open("/root/repo/README.md", encoding="utf-8").read()
+        open(os.path.join(REPO, "SURVEY.md"), encoding="utf-8").read()
+        + open(os.path.join(REPO, "README.md"), encoding="utf-8").read()
     )
     missing = sorted(q for q in registry.QUERIES if q not in text)
     assert not missing, f"undocumented queries: {missing}"
@@ -56,7 +59,7 @@ def test_check_norm_rejects_decimal_outright():
 
     import pytest
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     import importlib
 
     check = importlib.import_module("check")
@@ -90,7 +93,7 @@ def test_rotation_leads_with_stale_weak_then_oldest_records():
 
     # the confirmed tail is ordered by record age (oldest first); keys
     # sharing a round keep stable relative order
-    files = glob.glob("/root/repo/CORRECTNESS_r*.json")
+    files = glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
     if files:
         rounds = [latest.get(k, (0, ""))[0] for k in keys[n:]]
         assert rounds == sorted(rounds)

@@ -4,6 +4,7 @@ backgroundSender/backgroundRecovery semantics (main.go:275-321, 447-485)."""
 
 import datetime as dt
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -867,36 +868,117 @@ def test_streaming_session_window_merges_across_batches(spark, tmp_path):
     assert (4, 0) not in got3                               # window-end late
 
 
-def test_replay_crash_recovery_merges_old_with_new_spills(spark, tmp_path):
-    """The crash window between the queue-swap renames leaves the previous
-    generation at .old; if a flush spill recreates dlq_dir with fresh
-    packets BEFORE the next replay, recovery must MERGE (not skip) — a
-    restore-if-empty guard would let the swap's pre-clean delete every
-    pre-crash packet."""
-    import os
+DLQ_COLS = "uri string, body string, level int, created_ns bigint"
 
-    from pyspark.sql import functions as F
 
-    from proxyhouse_spark.streaming.pipeline import replay_dlq
-
-    dlq = str(tmp_path / "dlq")
-    sink = str(tmp_path / "sink")
-    cols = "event_id bigint, uri string, body string, level int, created_ns bigint"
-    # pre-crash generation, stranded at .old by a kill between the renames
+def _spill(spark, dlq, *bodies):
+    """A flush's spill: one appended file of level-1 packets."""
     spark.createDataFrame(
-        [(1, "/a", "b1", 2, 100)], cols
-    ).coalesce(1).write.parquet(dlq)
-    os.rename(dlq, dlq + ".old")
-    # a fresh spill recreates the queue dir before the next replay
-    spark.createDataFrame(
-        [(2, "/b", "b2", 4, 200)], cols
-    ).coalesce(1).write.parquet(dlq)
+        [(f"/{b}", b, 1, i) for i, b in enumerate(bodies)], DLQ_COLS
+    ).coalesce(1).write.mode("append").parquet(dlq)
 
-    counts = replay_dlq(
-        spark, dlq, sink, sender=_failing(F.lit(True))  # everything fails
-    )
-    # both generations survived: both packets escalated one level
-    assert counts["requeued"] == 2
-    rows = {r.event_id: r.level for r in spark.read.parquet(dlq).collect()}
-    assert rows == {1: 3, 2: 5}
-    assert not os.path.isdir(dlq + ".old")
+
+def _on_first_delete(m, path, before=None, after=None):
+    """Run ``before``/``after`` around the first file removed or renamed
+    away under ``path`` — where a rewrite starts dropping what it read."""
+    fired = []
+
+    def wrap(real):
+        def call(src, *args, **kwargs):
+            first = not fired and str(src).startswith(path)
+            if first:
+                fired.append(src)
+                if before:
+                    before()
+            real(src, *args, **kwargs)
+            if first and after:
+                after()
+        return call
+
+    for name in ("remove", "rename"):
+        m.setattr(os, name, wrap(getattr(os, name)))
+
+
+class _Killed(Exception):
+    pass
+
+
+def _die():
+    raise _Killed
+
+
+@pytest.mark.parametrize("lands", ["send", "cleanup"])
+def test_replay_leaves_a_packet_spilled_during_the_pass_queued(
+    spark, tmp_path, monkeypatch, lands
+):
+    """A live flush spills into the queue while a replay runs: during the
+    send, or just before the pass deletes the files it read. The spilled
+    packet was never sent, so it stays queued at level 1 and is not in
+    replayed/."""
+    dlq, sink = str(tmp_path / "dlq"), str(tmp_path / "sink")
+    _spill(spark, dlq, "queued")
+
+    def send(chunk):
+        if lands == "send":
+            _spill(spark, dlq, "spilled")
+        return {r.packet_id: True for r in chunk.select("packet_id").collect()}
+
+    if lands == "cleanup":
+        _on_first_delete(monkeypatch, dlq, before=lambda: _spill(spark, dlq, "spilled"))
+    counts = replay_dlq(spark, dlq, sink, sender=send)
+    assert counts == {"replayed": 1, "requeued": 0, "quarantined": 0}
+    assert {r.body: r.level for r in spark.read.parquet(dlq).collect()} == {"spilled": 1}
+    assert [r.buffer for r in spark.read.parquet(sink + "/replayed").collect()] == ["queued"]
+
+
+@pytest.mark.parametrize("op", ["replay", "compact"])
+def test_kill_part_way_through_the_deletes_loses_nothing(
+    spark, tmp_path, monkeypatch, op
+):
+    """A rewrite killed after its first delete, then more appends, then a
+    clean pass: every packet/row is still there (duplicates allowed — the
+    at-least-once contract; loss is not)."""
+    from proxyhouse_spark.sinks.compact import compact_parquet
+
+    d, sink = str(tmp_path / "d"), str(tmp_path / "sink")
+    for i in range(4):
+        _spill(spark, d, f"b{i}")
+    if op == "replay":
+        def rewrite(first):  # the first pass's downstream is still down
+            replay_dlq(spark, d, sink, sender=_failing(F.lit(True)) if first else None)
+
+        def present():
+            return {r.buffer for r in spark.read.parquet(sink + "/replayed").collect()} | {
+                r.body for r in spark.read.parquet(d).collect()
+            }
+    else:
+        def rewrite(first):
+            compact_parquet(spark, d, target_bytes=64 * 1024 * 1024)
+
+        def present():
+            return {r.body for r in spark.read.parquet(d).collect()}
+
+    with monkeypatch.context() as m:
+        _on_first_delete(m, d, after=_die)
+        with pytest.raises(_Killed):
+            rewrite(True)
+    _spill(spark, d, "b4", "b5")
+    rewrite(False)
+    assert present() == {f"b{i}" for i in range(6)}
+
+
+def test_flush_and_replay_hold_no_checkpoint_after_they_return(spark, dirs):
+    """Each flush trigger and each replay frees its checkpoint before it
+    returns: nothing they created stays in the block manager, and no scope
+    outlives the trigger or the query."""
+    from proxyhouse_spark import checkpoints
+
+    sc = spark.sparkContext
+    before = checkpoints._persistent_ids(sc)
+    reqs = [_req(1, "good", "(1)"), _req(2, "bad", "(2)")]
+    spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
+    _run_pipeline(spark, dirs, F.col("table_name") == "bad")
+    replay_dlq(spark, dirs["dlq"], dirs["sink"])
+    assert spark.read.parquet(dirs["sink"] + "/replayed").count() == 1
+    assert checkpoints._persistent_ids(sc) - before == set()
+    assert not [k for k in checkpoints._generations if k.startswith("flush_frame:")]

@@ -13,11 +13,13 @@ import argparse
 import datetime as dt
 import hashlib
 import math
+import os
 import sys
 import time
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
@@ -219,7 +221,7 @@ def main() -> int:
     if not args.names:
         import json as _json
 
-        with open("/root/repo/SELFCHECK.json", "w", encoding="utf-8") as f:
+        with open(os.path.join(REPO, "SELFCHECK.json"), "w", encoding="utf-8") as f:
             _json.dump(
                 {
                     "sf": args.sf,
