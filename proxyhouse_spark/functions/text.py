@@ -4,7 +4,10 @@ Every builder returns a PAIR of expression strings — ``spark`` (Spark SQL)
 and ``duck`` (DuckDB SQL) — implementing identical semantics, so each
 operator stays differentially testable. The dialects differ only in
 higher-order-function names (transform/list_transform, …); the logic is
-kept structurally identical so floating-point results agree.
+kept structurally identical so floating-point results agree. The SimHash
+fold builders are DuckDB-only: the engine spells both sketches
+relationally (operators/dedup.py::_simhash_frame, ::_simhash_wide_frame),
+and only the oracle folds.
 
 All hashing is md5-based (the one cryptographic hash both engines share),
 so MinHash/SimHash signatures are deterministic and engine-independent —
@@ -164,22 +167,8 @@ _HIGH_HEX = "('8', '9', 'a', 'b', 'c', 'd', 'e', 'f')"
 # hashing inside the per-bit loop.
 
 
-def token_hashes_spark(toks: str = "toks") -> str:
-    return f"transform({toks}, t -> md5(t))"
-
-
 def token_hashes_duck(toks: str = "toks") -> str:
     return f"list_transform({toks}, t -> md5(t))"
-
-
-def simhash_spark(hs: str = "hs") -> str:
-    return (
-        "aggregate(sequence(1, 16), CAST(0 AS BIGINT), (acc, p) -> acc + "
-        f"CASE WHEN aggregate(transform({hs}, h -> "
-        f"CASE WHEN substr(h, p, 1) IN {_HIGH_HEX} THEN 1 ELSE -1 END), "
-        "0, (a, x) -> a + x) > 0 THEN shiftleft(CAST(1 AS BIGINT), 16 - p) "
-        "ELSE CAST(0 AS BIGINT) END)"
-    )
 
 
 def simhash_duck(hs: str = "hs") -> str:
@@ -305,14 +294,6 @@ def fingerprint_duck(shingles: str = "sh") -> str:
 # string probes; the per-bit fold is then pure integer shift/mask.
 
 
-def token_words_spark(hs: str = "hs") -> str:
-    return (
-        f"transform({hs}, h -> named_struct("
-        "'w1', CAST(conv(substr(h, 1, 8), 16, 10) AS BIGINT), "
-        "'w2', CAST(conv(substr(h, 9, 8), 16, 10) AS BIGINT)))"
-    )
-
-
 def token_words_duck(hs: str = "hs") -> str:
     return (
         f"list_transform({hs}, h -> {{'w1': CAST(concat('0x', substr(h, 1, 8)) AS BIGINT), "
@@ -320,39 +301,24 @@ def token_words_duck(hs: str = "hs") -> str:
     )
 
 
-def _simhash32_word(ws: str, word: str, offset: int, duck: bool) -> str:
+def _simhash32_word_duck(ws: str, word: str, offset: int) -> str:
     """One 32-bit fingerprint word from the per-token packed words: bit q
     (global index) set iff Σ_tokens (2·bit_q(token) − 1) > 0."""
-    if duck:
-        contrib = f"2 * ((t.{word} >> ({offset + 32} - q)) & 1) - 1"
-        return (
-            f"CAST(list_sum(list_transform(range({offset + 1}, {offset + 33}), q -> "
-            f"CASE WHEN list_sum(list_transform({ws}, t -> {contrib})) > 0 "
-            f"THEN CAST(1 AS BIGINT) << ({offset + 32} - q) "
-            "ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
-        )
-    contrib = f"2 * CAST(shiftright(t.{word}, {offset + 32} - q) & 1 AS INT) - 1"
+    contrib = f"2 * ((t.{word} >> ({offset + 32} - q)) & 1) - 1"
     return (
-        f"aggregate(sequence({offset + 1}, {offset + 32}), CAST(0 AS BIGINT), (acc, q) -> acc + "
-        f"CASE WHEN aggregate(transform({ws}, t -> {contrib}), 0, (a, x) -> a + x) > 0 "
-        f"THEN shiftleft(CAST(1 AS BIGINT), {offset + 32} - q) ELSE CAST(0 AS BIGINT) END)"
+        f"CAST(list_sum(list_transform(range({offset + 1}, {offset + 33}), q -> "
+        f"CASE WHEN list_sum(list_transform({ws}, t -> {contrib})) > 0 "
+        f"THEN CAST(1 AS BIGINT) << ({offset + 32} - q) "
+        "ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
     )
 
 
-def simhash64_hi_spark(ws: str = "ws") -> str:
-    return _simhash32_word(ws, "w1", 0, duck=False)
-
-
-def simhash64_lo_spark(ws: str = "ws") -> str:
-    return _simhash32_word(ws, "w2", 32, duck=False)
-
-
 def simhash64_hi_duck(ws: str = "ws") -> str:
-    return _simhash32_word(ws, "w1", 0, duck=True)
+    return _simhash32_word_duck(ws, "w1", 0)
 
 
 def simhash64_lo_duck(ws: str = "ws") -> str:
-    return _simhash32_word(ws, "w2", 32, duck=True)
+    return _simhash32_word_duck(ws, "w2", 32)
 
 
 # ---------------------------------------------------------------------------

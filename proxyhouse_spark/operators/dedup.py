@@ -345,7 +345,7 @@ def ngram_jaccard_oracle() -> str:
 def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id, lang, 16-bit simhash — RELATIONAL bit-count spelling (r10).
 
-    The fold spelling (T.simhash_spark, kept for the DuckDB oracle)
+    The fold spelling (the DuckDB oracle's T.simhash_duck)
     interprets a lambda per (bit, token) pair; here tokens explode to
     rows, one codegen'd HashAggregate SUMs the 16 bit positions (bit p of
     the fingerprint is the HIGH bit of md5 hex digit p — read as integer
@@ -775,7 +775,7 @@ def _simhash_wide_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id, lang, 64-bit simhash as (hi, lo) 32-bit words.
 
     RELATIONAL bit-count spelling (r10, guide §4.1). The fold spelling
-    (T.simhash64_*_spark, kept for the DuckDB oracle) interprets a
+    (the DuckDB oracle's T.simhash64_*_duck) interprets a
     lambda per (bit, token) pair; it also ran as a SINGLE task (the
     repartition the other sketch builders carry was missing here), so
     3.4 s of q_simhash_wide's 3.7 s at sf0.1 was one core folding while

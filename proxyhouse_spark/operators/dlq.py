@@ -29,8 +29,6 @@ from .ingest import validate_requests
 
 MAX_LEVEL = 10  # quarantine threshold (main.go:366-369)
 
-DLQ_SCHEMA = "uri string, body string, level int, created_ns bigint"
-
 
 def dlq_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: the spill frame — deterministic synthetic failures over the

@@ -17,9 +17,14 @@ same directory, then deletes exactly the files it read (the reference's
 order: spill the resend first, then delete the file that was read,
 main.go:479-482). Files another writer appends meanwhile (a flush spill)
 are not in the list, so they are neither read nor deleted; the next pass
-takes them. Two appends into one directory at the same moment share
-Spark's ``_temporary`` staging directory, and one of them can fail; a
-rewrite whose append fails stops before its deletes. A kill at any point leaves the read files beside (part of) the
+takes them. Two Spark appends into one directory at the same moment share
+the committer's ``_temporary`` staging directory, and one job's cleanup
+deletes the other's in-flight files, so every append into a flush, spill or
+rewrite directory goes through ``append_parquet``, which holds one lock per
+directory (keyed by its real path) for the write. The lock covers one
+process only: writers in other processes (another driver on the same
+directory) are not serialized. A rewrite whose append fails stops before
+its deletes. A kill at any point leaves the read files beside (part of) the
 new generation — duplicates of that pass's rows, which the at-least-once
 contract allows — and never a loss, with no recovery step on restart.
 Readers between the append and the last delete see those duplicates; a
@@ -33,10 +38,14 @@ from __future__ import annotations
 
 import math
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # one HDFS-ish block per file
+
+_dir_locks: dict[str, threading.Lock] = {}
+_dir_locks_guard = threading.Lock()
 
 
 def parquet_files(path: str) -> list[str]:
@@ -57,10 +66,21 @@ def parquet_file_count(path: str) -> int:
     return len(parquet_files(path))
 
 
+def append_parquet(frame: DataFrame, path: str, *partition_by: str) -> None:
+    """Append ``frame`` into ``path`` while holding the directory's lock."""
+    writer = frame.write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    with _dir_locks_guard:
+        lock = _dir_locks.setdefault(os.path.realpath(path), threading.Lock())
+    with lock:
+        writer.parquet(path)
+
+
 def replace_files(frame: DataFrame, path: str, files: list[str]) -> None:
     """Append ``frame`` into ``path``, then delete ``files`` — the parquet
     files ``frame`` was read from — and their ``.crc`` sidecars."""
-    frame.write.mode("append").parquet(path)
+    append_parquet(frame, path)
     for f in files:
         head, name = os.path.split(f)
         for p in (f, os.path.join(head, f".{name}.crc")):

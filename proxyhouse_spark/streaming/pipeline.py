@@ -49,7 +49,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
@@ -58,7 +58,7 @@ from ..checkpoints import release_scope, scoped_checkpoint
 from ..functions.scalars import url_rewrite
 from ..operators.dlq import MAX_LEVEL
 from ..operators.ingest import FWD_HOST, REPL_HOST, sink_frame
-from ..sinks.compact import parquet_files, replace_files
+from ..sinks.compact import append_parquet, parquet_files, replace_files
 from ..sinks.graphite import PREFIX_AVG, PREFIX_CNT, MetricStorage
 from .passes import parquet_sink, scratch_dir, two_pass
 
@@ -260,11 +260,9 @@ class FlushPipeline:
             )
             # One output file per flush mirrors "few large requests": the frame
             # is tiny (one row per distinct uri), so coalesce(1) costs nothing.
-            writer = ok.coalesce(1).write.mode("append")
-            if self.partition_by_table:
-                writer = writer.partitionBy("table_name")
             write_start = time.monotonic()
-            writer.parquet(self.sink_dir)
+            parts = ["table_name"] if self.partition_by_table else []
+            append_parquet(ok.coalesce(1), self.sink_dir, *parts)
             if self.sender is None:
                 send_ms = int((time.monotonic() - write_start) * 1000)
             m = {"batch_id": batch_id, **obs.get}
@@ -281,12 +279,13 @@ class FlushPipeline:
                 self.metric_storage.increment("bytesSent", m["bytes_sent"])
                 self.metric_storage.increment("sendDuration", send_ms)
             if n_keys > m["requests_sent"]:  # failed keys = keys − delivered keys
-                failed.select(
+                spill = failed.select(
                     F.col("uri"),
                     F.col("buffer").alias("body"),
                     F.lit(1).cast("int").alias("level"),  # first failure → level 1 (main.go:441)
                     (F.unix_micros(F.current_timestamp()) * 1000).alias("created_ns"),
-                ).coalesce(1).write.mode("append").parquet(self.dlq_dir)
+                )
+                append_parquet(spill.coalesce(1), self.dlq_dir)
         finally:
             release_scope(self.spark, scope)
 
@@ -372,7 +371,7 @@ def replay_dlq(
     own):
 
     - the DLQ read's schema inference;
-    - the replay sequence (window + local checkpoint), whose row count
+    - the replay sequence (one-task sort + local checkpoint), whose row count
       rides the checkpoint (``observe``);
     - one send per chunk — the only Python-worker tasks;
     - the ``replayed/`` append, only when a packet was delivered;
@@ -392,14 +391,17 @@ def replay_dlq(
     quarantined = dlq.filter(F.col("level") >= MAX_LEVEL)
 
     # Global replay sequence = the reference's lexicographic filename
-    # order. The unpartitioned row_number is bounded by failure volume
-    # (the same justification as q_dlq_replay_order's plan whitelist);
-    # payloads stay on executors — the driver sees only row COUNT and
-    # per-chunk (packet_id, delivered) statuses. The seq doubles as the
-    # per-packet delivery identity: distinct packets share a uri, so a
-    # uri-keyed status dict would collapse them (a failed packet could
-    # inherit a later same-uri success and vanish from the queue).
-    # Numbered ONCE, into a local checkpoint: a cached plan would be
+    # order: the scan stays wide, one task sorts the queue by
+    # (level, created_ns) and numbers it 1..n in that order (one
+    # partition, so monotonically_increasing_id is the row index). The
+    # queue is bounded by failure volume (the same justification as
+    # q_dlq_replay_order's plan whitelist); payloads stay on executors —
+    # the driver sees only row COUNT and per-chunk (packet_id, delivered)
+    # statuses. The seq doubles as the per-packet delivery identity:
+    # distinct packets share a uri, so a uri-keyed status dict would
+    # collapse them (a failed packet could inherit a later same-uri
+    # success and vanish from the queue). Numbered ONCE, into a local
+    # checkpoint of one partition in seq order: a cached plan would be
     # re-cached by any append under dlq_dir (a spill, or this pass's own
     # new generation) and renumber its (level, created_ns) ties, so the
     # statuses would land on the wrong packets. Called through the module:
@@ -408,9 +410,9 @@ def replay_dlq(
     scope = "replay_queue:" + dlq_dir
     seq_obs = Observation()
     seqd = checkpoints.scoped_checkpoint(
-        eligible.withColumn(
-            "seq", F.row_number().over(Window.orderBy("level", "created_ns"))
-        )
+        eligible.repartition(1)
+        .sortWithinPartitions("level", "created_ns")
+        .withColumn("seq", F.monotonically_increasing_id() + 1)
         .withColumn("packet_id", F.col("seq").cast("string"))
         .withColumn("target_url", url_rewrite(F.col("uri"), fwd, repl))
         .withColumn("buffer", F.col("body"))
@@ -424,12 +426,10 @@ def replay_dlq(
             statuses = {}
             size = 1 if throttle_seconds > 0 else max(n_eligible, 1)
             for start in range(1, n_eligible + 1, size):
-                chunk = (
-                    seqd.filter(F.col("seq").between(start, start + size - 1))
-                    .select("seq", "packet_id", "uri", "target_url", "buffer", "level")
-                    .coalesce(1)  # one task → in-order send
-                    .sortWithinPartitions("seq")
-                )
+                # one partition in seq order already: one task, in-order send
+                chunk = seqd.filter(
+                    F.col("seq").between(start, start + size - 1)
+                ).select("seq", "packet_id", "uri", "target_url", "buffer", "level")
                 statuses.update(sender(chunk))
                 if throttle_seconds > 0 and start < n_eligible:
                     time.sleep(throttle_seconds)
@@ -451,9 +451,7 @@ def replay_dlq(
         # creates a zero-row part file, which the quarantine contract forbids
         # (test_streaming.py pins no parquet under replayed/ when nothing ships).
         if n_replayed:
-            delivered.coalesce(1).write.mode("append").parquet(
-                os.path.join(sink_dir, "replayed")
-            )
+            append_parquet(delivered.coalesce(1), os.path.join(sink_dir, "replayed"))
 
         escalated = failed.withColumn("level", (F.col("level") + 1).cast("int"))
         # requeued/quarantined ride the new generation's append (observe),

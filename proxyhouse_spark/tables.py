@@ -101,9 +101,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif tn == "timestamp":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp_ntz"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL API paths)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -6,7 +6,7 @@ import datetime
 
 from proxyhouse_spark import registry
 from tests.conftest import SF_SMALL
-from tests.test_plans import plan_of, tree_of
+from test_plans import plan_of, tree_of  # the module pytest collects: one plan cache
 
 
 def _ts(m: int) -> datetime.datetime:

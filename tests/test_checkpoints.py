@@ -1,6 +1,11 @@
 """Generation-scoped checkpoint manager: blocks are freed, frames stay
 correct (checkpoints.py — the long-running-engine leak fix)."""
 
+import threading
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from proxyhouse_spark.checkpoints import (
     _persistent_ids,
     release_scope,
@@ -43,6 +48,25 @@ def test_scopes_are_independent(spark):
 
 def test_release_unknown_scope_is_noop(spark):
     release_scope(spark, "never_created")
+
+
+def test_observed_metrics_arrive_through_a_scoped_checkpoint(spark):
+    """The flush's key count and the replay's queue length ride observe()
+    on the frame scoped_checkpoint materializes, and no other job runs it.
+    Observation.get waits without a timeout, so a Spark that stopped
+    delivering the metric through localCheckpoint would hang the flush:
+    bound the wait here instead."""
+    obs = Observation()
+    scoped_checkpoint(
+        _frame(spark, 12).observe(obs, F.count(F.lit(1)).alias("n")), "t_observe"
+    )
+    got = {}
+    waiter = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+    waiter.start()
+    waiter.join(60)
+    release_scope(spark, "t_observe")
+    assert not waiter.is_alive(), "observe() metric did not arrive within 60 s"
+    assert got == {"n": 12}
 
 
 _FREE_SCRIPT = """

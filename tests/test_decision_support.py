@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from proxyhouse_spark import registry
 from proxyhouse_spark.tables import table
 from tests.conftest import SF_SMALL
-from tests.test_plans import plan_of, tree_of
+from test_plans import plan_of, tree_of  # the module pytest collects: one plan cache
 
 
 def test_customer_distribution_preserves_zero_order_customers(spark):

@@ -289,7 +289,7 @@ def test_weighted_sample_prefers_heavy_docs_and_plans_window_limit(spark):
         assert len(ws) == min(WSAMPLE_K, len(by_lang[lang]))
         corpus_mean = sum(by_lang[lang]) / len(by_lang[lang])
         assert sum(ws) / len(ws) > corpus_mean  # weight-proportional skew
-    from tests.test_plans import plan_of
+    from test_plans import plan_of  # the module pytest collects: one plan cache
 
     assert "WindowGroupLimit" in plan_of(spark, "q_weighted_sample")
 

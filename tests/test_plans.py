@@ -10,11 +10,32 @@ from proxyhouse_spark import registry
 from tests.conftest import SF_SMALL
 
 
+# Each registered query is built and planned at most once per session: the
+# sweeps, the pins and the modules importing plan_of share one build. Only
+# the schema and the formatted plan string are kept, never the DataFrame, so
+# no JVM plan object stays alive. A test that changes session conf builds
+# its own frame instead. Importers name this module ``test_plans``, as
+# pytest does: ``tests.test_plans`` would be a second module, with a second
+# cache.
+_BUILT: dict[str, tuple] = {}
+
+
+def _built(spark, name: str) -> tuple:
+    if name not in _BUILT:
+        df = registry.QUERIES[name](spark, SF_SMALL)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        _BUILT[name] = (df.schema, df._jdf.queryExecution().explainString(mode))
+    return _BUILT[name]
+
+
 def plan_of(spark, name: str) -> str:
-    df = registry.QUERIES[name](spark, SF_SMALL)
-    je = df._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return je.explainString(mode)
+    return _built(spark, name)[1]
+
+
+def schema_of(spark, name: str):
+    return _built(spark, name)[0]
 
 
 def tree_of(plan: str) -> str:
@@ -1016,10 +1037,9 @@ def test_no_query_emits_decimal_output(spark):
     for name in sorted(registry.QUERIES):
         if name in _EXECUTING:
             continue
-        df = registry.QUERIES[name](spark, SF_SMALL)
         bad = [
             f"{f.name}:{f.dataType.simpleString()}"
-            for f in df.schema.fields
+            for f in schema_of(spark, name).fields
             if has_decimal(f.dataType)
         ]
         if bad:
@@ -1053,8 +1073,7 @@ def test_output_type_categories_match_oracle(spark):
     for name in sorted(reg.QUERIES):
         if name in _EXECUTING or name not in reg.ORACLES:
             continue
-        sdf = reg.QUERIES[name](spark, SF_SMALL)
-        stypes = {f.name: spark_cat(f.dataType) for f in sdf.schema.fields}
+        stypes = {f.name: spark_cat(f.dataType) for f in schema_of(spark, name).fields}
         rel = con.sql(reg.ORACLES[name])
         otypes = {c: duck_cat(t) for c, t in zip(rel.columns, rel.types)}
         bad = [

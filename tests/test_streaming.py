@@ -967,6 +967,38 @@ def test_kill_part_way_through_the_deletes_loses_nothing(
     assert present() == {f"b{i}" for i in range(6)}
 
 
+def test_replay_numbers_its_queue_without_a_window(spark, tmp_path, monkeypatch):
+    """The replay numbers its queue in one sorted task, not with an
+    unpartitioned row_number (whose WindowExec logs "No Partition Defined"
+    on every pass): the frame it checkpoints plans no Window, and the
+    packets of a queue read from several files still go out numbered
+    1..n in (level, created_ns) order."""
+    from proxyhouse_spark import checkpoints
+
+    dlq, sink = str(tmp_path / "dlq"), str(tmp_path / "sink")
+    rows = [(f"/{i}", f"b{i}", i % 3, (i * 37) % 101) for i in range(60)]
+    spark.createDataFrame(rows, DLQ_COLS).repartition(5).write.parquet(dlq)
+    plans = []
+    real = checkpoints.scoped_checkpoint
+
+    def spy(frame, scope):
+        plans.append(frame._jdf.queryExecution().executedPlan().toString())
+        return real(frame, scope)
+
+    monkeypatch.setattr(checkpoints, "scoped_checkpoint", spy)
+    sent = []
+
+    def send(chunk):
+        got = [(r.seq, r.buffer) for r in chunk.collect()]
+        sent.extend(got)
+        return {str(seq): True for seq, _ in got}
+
+    assert replay_dlq(spark, dlq, sink, sender=send)["replayed"] == 60
+    assert len(plans) == 1 and "Window" not in plans[0], plans
+    expected = [b for _, b, _, _ in sorted(rows, key=lambda r: (r[2], r[3]))]
+    assert sent == list(enumerate(expected, start=1))
+
+
 def test_flush_and_replay_hold_no_checkpoint_after_they_return(spark, dirs):
     """Each flush trigger and each replay frees its checkpoint before it
     returns: nothing they created stays in the block manager, and no scope

@@ -14,16 +14,18 @@ numeric to bound):
 
 Prints one JSON line with the worst relative error per op.
 
-Usage: python tools/approx_probe.py [--sf /root/repo/.scratch/sf1]
+Usage: python tools/approx_probe.py [--sf .scratch/sf1]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from proxyhouse_spark.session import get_spark  # noqa: E402
 
@@ -38,7 +40,7 @@ def rel(a: float, b: float) -> float:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--sf", default=os.path.join(REPO, ".scratch", "sf1"))
     args = ap.parse_args()
 
     from proxyhouse_spark import registry

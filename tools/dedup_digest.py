@@ -29,7 +29,7 @@ mean and peak hypervisor-steal share per engine phase; wall times are
 reported but must be EXCLUDED from any scale envelope unless the trace is
 quiet (mean < 2%), exactly as the ~sf1 ijoin digests are recorded.
 
-Usage: python tools/dedup_digest.py [--sf /root/repo/.scratch/sf1]
+Usage: python tools/dedup_digest.py [--sf .scratch/sf1]
            [--query minhash|substring|both]
 """
 
@@ -42,7 +42,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -193,7 +194,7 @@ def run_one(spark, con, name: str, sf: str) -> dict:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--sf", default=os.path.join(REPO, ".scratch", "sf1"))
     ap.add_argument(
         "--query", choices=["minhash", "substring", "both"], default="both"
     )

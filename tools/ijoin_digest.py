@@ -39,7 +39,7 @@ b_id/b_ts are coalesced to -1 inside v/w in BOTH engines, so the digest
 distinguishes a null-padded row from any matched row (b_id >= 1 always),
 and the raw sum_b skips NULLs identically in both engines.
 
-Usage: python tools/ijoin_digest.py [--sf /root/repo/.scratch/sf1]
+Usage: python tools/ijoin_digest.py [--sf .scratch/sf1]
            [--join-type inner|leftOuter]
 """
 
@@ -52,7 +52,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # a generous pass bound for the ~sf1 run (the ~sf1 events source is over
 # the 4 MiB line, so the passes already get 32 state partitions)
@@ -74,7 +75,7 @@ def uri_code(u: str) -> int:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--sf", default=os.path.join(REPO, ".scratch", "sf1"))
     ap.add_argument("--join-type", choices=["inner", "leftOuter"],
                     default="inner")
     args = ap.parse_args()

@@ -10,9 +10,11 @@ Usage: python tools/plan_report.py  (writes PLANS.md at the repo root)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE, SF_DIR  # noqa: E402
 from proxyhouse_spark import registry  # noqa: E402
@@ -38,7 +40,7 @@ def main() -> None:
         df = registry.QUERIES[name](spark, SF_DIR)
         tree = df._jdf.queryExecution().explainString(mode).split("\n\n")[0]
         out.append(f"## {name}\n\n```\n{tree}\n```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE)} queries)")
 

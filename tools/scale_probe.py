@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -27,7 +28,7 @@ from proxyhouse_spark import registry  # noqa: E402
 from proxyhouse_spark.session import get_spark  # noqa: E402
 from proxyhouse_spark.tables import TABLES, table  # noqa: E402
 
-SCRATCH = "/root/repo/.scratch/sf1"
+SCRATCH = os.path.join(REPO, ".scratch", "sf1")
 COPIES = 10
 OFF = 10_000_000  # multiple of every fixture modulus (10, 25, …): injected
 # dup/near-dup patterns replicate per copy instead of breaking

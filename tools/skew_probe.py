@@ -56,9 +56,10 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SCRATCH = "/root/repo/.scratch/skew"
+SCRATCH = os.path.join(REPO, ".scratch", "skew")
 
 JOIN_VARIANTS = ("join_unsalted", "join_aqe_split", "join_salted")
 AGG_VARIANTS = ("agg_one_stage", "agg_two_stage")

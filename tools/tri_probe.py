@@ -38,7 +38,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -214,7 +215,7 @@ def main() -> int:
                 [sys.executable, __file__, "--variant", mode, "--sf", args.sf],
                 capture_output=True,
                 text=True,
-                cwd="/root/repo",
+                cwd=REPO,
             )
             line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
             if not line:

@@ -16,9 +16,11 @@ Usage: python tools/type_sweep.py [--sf /root/testdata/sf0.01] [name ...]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 

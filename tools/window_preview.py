@@ -15,9 +15,11 @@ Usage: python tools/window_preview.py [--n 50]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
