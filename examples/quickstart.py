@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from proxyhouse_spark.session import get_spark  # noqa: E402
-from proxyhouse_spark.sinks.graphite import MetricStorage  # noqa: E402
+from proxyhouse_spark.sinks.graphite import PREFIX_CNT, MetricStorage  # noqa: E402
 from proxyhouse_spark.sources.http_ingest import IngestShim  # noqa: E402
 from proxyhouse_spark.streaming.passes import await_or_raise  # noqa: E402
 from proxyhouse_spark.streaming.pipeline import (  # noqa: E402
@@ -132,7 +132,13 @@ def main() -> None:
           f"DLQ now {spark.read.parquet(d['dlq']).count()} packet(s)")
 
     # -- 6. counter metrics (metric.go fan-out names) -------------------------
-    sent = {k: v for k, v in storage.snapshot().items() if "sent" in k}
+    # the flush trigger's record fed both sides: received counts only the 4
+    # accepted inserts (the 405 and 404 requests are not inserts)
+    snap = storage.snapshot()
+    received = {k: v for k, v in snap.items() if "received" in k}
+    sent = {k: v for k, v in snap.items() if "sent" in k}
+    assert received[f"{PREFIX_CNT}.requests_received"] == 4
+    print(f"[6] received-side counters: {json.dumps(received, sort_keys=True)}")
     print(f"[6] sent-side counters: {json.dumps(sent, sort_keys=True)}")
     print("done.")
 

@@ -1439,10 +1439,7 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.createOrReplaceTempView(f"kcore_edges_{r + 1}")
         _deg(r + 1)
     return spark.createDataFrame(
-        [
-            (r, n_nodes[r] or 0, n_edges[r] or 0, k_val)
-            for r in range(4)
-        ],
+        [(r, n_nodes[r], n_edges[r], k_val) for r in range(4)],
         "round int, nodes_kept bigint, edges_kept bigint, k bigint",
     )
 

@@ -597,13 +597,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "label", "nmin")
             .observe(
                 obs,
-                F.sum(
-                    (F.col("nmin") < F.col("label")).cast("long")
-                ).alias("changed"),
+                F.count(F.when(F.col("nmin") < F.col("label"), 1)).alias("changed"),
             ),
             "cc_upd",
         )
-        changed = obs.get["changed"] or 0
+        changed = obs.get["changed"]
         # lazily projected off the checkpointed round frame; the NEXT
         # round's checkpoint reads it before cc_upd's old generation is
         # released (scoped_checkpoint materializes first, then frees).

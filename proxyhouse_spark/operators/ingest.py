@@ -42,15 +42,17 @@ FWD_HOST = "http://clickhouse:8123"
 REPL_HOST = "http://localhost:8123"
 
 
-def validate_requests(df: DataFrame) -> DataFrame:
-    """P1-P3: keep only data-plane requests (POST, path '/', non-empty body).
+def accepted() -> Column:
+    """P1-P3: a data-plane request (POST, path '/', non-empty body).
 
     Reference: method switch main.go:171-225, path check main.go:166-169,
-    empty-body 405 main.go:219-221. Pure narrow filters — pushed to the scan.
-    """
-    return df.filter(
-        (F.col("method") == "POST") & (F.col("path") == "/") & (F.length("body") > 0)
-    )
+    empty-body 405 main.go:219-221."""
+    return (F.col("method") == "POST") & (F.col("path") == "/") & (F.length("body") > 0)
+
+
+def validate_requests(df: DataFrame) -> DataFrame:
+    """Keep only accepted requests. Pure narrow filters — pushed to the scan."""
+    return df.filter(accepted())
 
 
 def with_fmt(df: DataFrame) -> DataFrame:

@@ -13,14 +13,16 @@ Reference semantics (/root/reference/metric.go):
   / ``relap.avg.proxyhouse``) and the increment sites main.go:209-216
   (received side) and main.go:394-405, 426-429 (sent side).
 
-Spark wiring (streaming/pipeline.py): the received-side counters come from
-``df.observe()`` on the request stream — Spark's accumulator-backed
-observed metrics ARE the distributed analog of the reference's atomic
-counter map (aggregated executor-side per micro-batch, delivered to the
-driver with the progress event, no extra pass over the data) — captured by
-a ``StreamingQueryListener``; the sent-side counters are incremented by the
-flush itself. One deviation for determinism: Go iterates its map in random
-order, we emit remaining counters sorted by name.
+Spark wiring (streaming/pipeline.py): each flush trigger builds one record
+whose counts are ``observe()`` metrics on the trigger's own jobs — Spark's
+accumulator-backed observed metrics ARE the distributed analog of the
+reference's atomic counter map (aggregated executor-side, no extra pass
+over the data): received counters over the raw micro-batch, sent counters
+over the delivered keys. With a ``MetricStorage`` attached, the flush
+increments every counter from that record through one name→field table
+(``pipeline.GRAPHITE_COUNTERS``); nothing else has to be registered. One
+deviation for determinism: Go iterates its map in random order, we emit
+remaining counters sorted by name.
 """
 
 from __future__ import annotations

@@ -140,7 +140,6 @@ class IngestShim:
         critlevel: int = 500,
         keepalive: float = 10.0,
         readtimeout: float = 5.0,
-        delim: str = ",",
     ) -> None:
         self.spool_dir = spool_dir
         self.flush_seconds = flush_seconds
@@ -151,12 +150,8 @@ class IngestShim:
         # inactivity until a connection's FIRST request is answered (Go's
         # ReadHeaderTimeout); `keepalive` bounds it after that, i.e. the
         # idle wait for a follow-up request (Go's IdleTimeout).
-        # `delim` is the -delim flag (main.go:38) — recorded here so the
-        # aggregation reading this shim's spool uses the same Values
-        # delimiter (buffer_aggregate(df, delim=shim.delim)).
         self.keepalive = keepalive
         self.readtimeout = readtimeout
-        self.delim = delim
         self._lock = threading.Lock()
         self._records: list[tuple] = []
         self._queries: dict[str, str] = {}

@@ -51,13 +51,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from .. import checkpoints
 from ..checkpoints import release_scope, scoped_checkpoint
 from ..functions.scalars import url_rewrite
 from ..operators.dlq import MAX_LEVEL
-from ..operators.ingest import FWD_HOST, REPL_HOST, sink_frame
+from ..operators.ingest import FWD_HOST, REPL_HOST, accepted, sink_frame
 from ..sinks.compact import append_parquet, parquet_files, replace_files
 from ..sinks.graphite import PREFIX_AVG, PREFIX_CNT, MetricStorage
 from .passes import parquet_sink, scratch_dir, two_pass
@@ -113,67 +113,19 @@ def _split_by_statuses(
     )
 
 
-def unload_state_stores(spark: SparkSession) -> None:
-    """EXPLICIT hygiene: release finished queries' state-store heap now.
-
-    Spark caches every loaded state-store provider executor-side
-    (``StateStore.loadedProviders``); the maintenance tick
-    (``spark.sql.streaming.stateStore.maintenanceInterval``, default
-    60 s) evicts the ones no active query holds. For up to a minute
-    after an availableNow pass terminates, its state therefore stays
-    live in the executor heap. The r09 diagnosis (tools/tri_probe.py)
-    measured both sides of the trade and decided AGAINST calling this
-    automatically: the pinned heap at gate scale is small (~50 MB after
-    q_stream_minhash at sf0.1, direct Runtime heap measurement), the
-    same-host wall outliers first attributed to it turned out to be
-    hypervisor steal, and an automatic unload costs ~30% on every
-    stream re-run in the same session (9.0-9.7 s -> 11.6-12.0 s
-    same-session A/B: each run re-loads providers from checkpoint files
-    the cache would have kept warm). Call it explicitly in a
-    long-running mixed pipeline before a heap-critical batch job when
-    the preceding streaming state is known to be large (the ~sf1
-    interval join holds multi-GB state). Only safe - and only acting -
-    when no stream is active."""
-    if spark.streams.active:
-        return
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # internal API; a Spark upgrade must not break the data path
-
-
-class GraphiteListener(StreamingQueryListener):
-    """Received-side counter capture (main.go:209-216): each progress event
-    carries the ``gr_received`` observed metrics — Spark's accumulator-backed
-    ``observe()`` aggregates are the distributed analog of the reference's
-    mutex-guarded counter map (summed executor-side within the micro-batch,
-    delivered with the progress event, zero extra passes) — and increments
-    the reference's Graphite counter names into a MetricStorage."""
-
-    OBSERVATION = "gr_received"
-
-    def __init__(self, storage: MetricStorage) -> None:
-        self.storage = storage
-        self.events = 0
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        row = event.progress.observedMetrics.get(self.OBSERVATION)
-        if row is None:
-            return
-        self.events += 1
-        self.storage.increment(
-            f"{PREFIX_CNT}.requests_received", row["requests_received"]
-        )
-        self.storage.increment(f"{PREFIX_CNT}.bytes_received", row["bytes_received"])
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        pass
+#: The reference's Graphite counter map (metric.go; increments at
+#: main.go:209-216 received, 394-405 and 426-428 sent) as a table: each
+#: counter adds one field of a trigger's flush record.
+GRAPHITE_COUNTERS = (
+    (f"{PREFIX_CNT}.requests_received", "requests_received"),
+    (f"{PREFIX_CNT}.bytes_received", "bytes_received"),
+    (f"{PREFIX_CNT}.requests_sent", "requests_sent"),
+    (f"{PREFIX_CNT}.rows_sent", "rows_sent"),
+    (f"{PREFIX_CNT}.bytes_sent", "bytes_sent"),
+    (f"{PREFIX_AVG}.bytes_sent", "bytes_sent"),
+    ("bytesSent", "bytes_sent"),
+    ("sendDuration", "send_ms"),
+)
 
 
 class FlushPipeline:
@@ -184,7 +136,16 @@ class FlushPipeline:
     the reference's send(), main.go:376-445): called once per trigger with
     the flush frame, it returns ``{uri: delivered}``; delivered keys land in
     the sink table and the rest spill to the DLQ at level 1. Without a
-    sender the Parquet sink is the delivery and every key is delivered."""
+    sender the Parquet sink is the delivery and every key is delivered.
+
+    Each trigger appends one record to ``metrics``: ``batch_id``,
+    ``requests_received`` and ``bytes_received`` (accepted inserts only,
+    main.go:209-216), ``keys`` (distinct uris flushed), ``requests_sent``,
+    ``rows_sent`` and ``bytes_sent`` (delivered keys, main.go:394-405),
+    ``spilled_keys`` and ``send_ms`` (main.go:426). The counts ride the
+    trigger's own jobs as ``observe()`` metrics, so reporting adds no job.
+    With ``metric_storage`` set, the record also increments the reference's
+    Graphite counters (``GRAPHITE_COUNTERS``)."""
 
     def __init__(
         self,
@@ -196,6 +157,7 @@ class FlushPipeline:
         trigger_seconds: int = 2,
         fwd: str = FWD_HOST,
         repl: str = REPL_HOST,
+        delim: str = ",",
         sender: Sender | None = None,
         partition_by_table: bool = False,
         metric_storage: MetricStorage | None = None,
@@ -208,6 +170,8 @@ class FlushPipeline:
         self.trigger_seconds = trigger_seconds
         self.fwd = fwd
         self.repl = repl
+        # the -delim flag (main.go:38): the Values delimiter of the keyed concat
+        self.delim = delim
         self.sender = sender
         # Hive-partition the sink by extracted table name: per-table readers
         # then prune to their directory at the SCAN (PartitionFilters), the
@@ -215,14 +179,7 @@ class FlushPipeline:
         # reference's analog is its per-table metric split (extractTable,
         # main.go:210-216) — here the split is physical.
         self.partition_by_table = partition_by_table
-        # per-flush delivery counters — the reference's rows_sent /
-        # requests_sent / bytes_sent Graphite metrics (main.go:394-405),
-        # collected via observe(): piggybacked on the sink action, no
-        # second pass over the data.
-        self.metrics: list[dict] = []
-        # Graphite counter map (metric.go): sent-side counters are
-        # incremented by the flush below; received-side ones by a
-        # GraphiteListener reading the stream's observed metrics.
+        self.metrics: list[dict] = []  # one record per trigger
         self.metric_storage = metric_storage
 
     # -- one micro-batch = one reference flush cycle -------------------------
@@ -233,12 +190,25 @@ class FlushPipeline:
         # then read one compute. The scope is per pipeline (Spark runs one
         # query per checkpoint dir), so another pipeline's trigger never
         # frees this frame, and it is released when the trigger ends: no
-        # checkpoint outlives its trigger or the query. The key count rides
-        # the checkpoint (observe), so no job probes the spill below.
+        # checkpoint outlives its trigger or the query. The received counts
+        # (over the raw batch, below the groupBy) and the key count (over the
+        # flush frame) ride that checkpoint's job, and the sent counts ride
+        # the sink append: the record costs no job of its own.
         scope = "flush_frame:" + self.checkpoint_dir
-        keys_obs = Observation()
+        received, keys_obs, sent = Observation(), Observation(), Observation()
         grouped = scoped_checkpoint(
-            sink_frame(batch_df, self.fwd, self.repl)
+            sink_frame(
+                batch_df.observe(
+                    received,
+                    F.count(F.when(accepted(), 1)).alias("requests_received"),
+                    F.coalesce(
+                        F.sum(F.when(accepted(), F.length("body"))), F.lit(0)
+                    ).alias("bytes_received"),
+                ),
+                self.fwd,
+                self.repl,
+                self.delim,
+            )
             .withColumn("batch_id", F.lit(batch_id))
             .observe(keys_obs, F.count(F.lit(1)).alias("keys")),
             scope,
@@ -251,9 +221,8 @@ class FlushPipeline:
             send_ms = int((time.monotonic() - send_start) * 1000)
             n_keys = keys_obs.get["keys"]
             ok, failed = _split_by_statuses(grouped, statuses, n_rows=n_keys)
-            obs = Observation()
             ok = ok.observe(
-                obs,
+                sent,
                 F.count(F.lit(1)).alias("requests_sent"),
                 F.coalesce(F.sum("rowcount"), F.lit(0)).alias("rows_sent"),
                 F.coalesce(F.sum(F.length("buffer")), F.lit(0)).alias("bytes_sent"),
@@ -265,20 +234,10 @@ class FlushPipeline:
             append_parquet(ok.coalesce(1), self.sink_dir, *parts)
             if self.sender is None:
                 send_ms = int((time.monotonic() - write_start) * 1000)
-            m = {"batch_id": batch_id, **obs.get}
-            self.metrics.append(m)
-            if self.metric_storage is not None:
-                # sent-side increments, aggregated per flush (main.go:394-405,
-                # 426-428; same totals as the reference's per-send calls)
-                self.metric_storage.increment(
-                    f"{PREFIX_CNT}.requests_sent", m["requests_sent"]
-                )
-                self.metric_storage.increment(f"{PREFIX_CNT}.rows_sent", m["rows_sent"])
-                self.metric_storage.increment(f"{PREFIX_CNT}.bytes_sent", m["bytes_sent"])
-                self.metric_storage.increment(f"{PREFIX_AVG}.bytes_sent", m["bytes_sent"])
-                self.metric_storage.increment("bytesSent", m["bytes_sent"])
-                self.metric_storage.increment("sendDuration", send_ms)
-            if n_keys > m["requests_sent"]:  # failed keys = keys − delivered keys
+            record = {"batch_id": batch_id, **received.get, "keys": n_keys, **sent.get}
+            record["spilled_keys"] = n_keys - record["requests_sent"]
+            record["send_ms"] = send_ms
+            if record["spilled_keys"]:
                 spill = failed.select(
                     F.col("uri"),
                     F.col("buffer").alias("body"),
@@ -286,33 +245,22 @@ class FlushPipeline:
                     (F.unix_micros(F.current_timestamp()) * 1000).alias("created_ns"),
                 )
                 append_parquet(spill.coalesce(1), self.dlq_dir)
+            self.metrics.append(record)
+            if self.metric_storage is not None:
+                # per-flush totals: the same sums as the reference's per-request
+                # and per-send increments
+                for name, field in GRAPHITE_COUNTERS:
+                    self.metric_storage.increment(name, record[field])
         finally:
             release_scope(self.spark, scope)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
         from ..sources.requests import requests_stream_df
 
-        stream = requests_stream_df(self.spark, self.source_dir)
-        if self.metric_storage is not None:
-            # received-side counters (main.go:209-216: accepted inserts
-            # only) ride the micro-batch as observed metrics; a
-            # GraphiteListener turns each progress event into increments.
-            accepted = (
-                (F.col("method") == "POST")
-                & (F.col("path") == "/")
-                & (F.length("body") > 0)
-            )
-            stream = stream.observe(
-                GraphiteListener.OBSERVATION,
-                F.coalesce(
-                    F.sum(F.when(accepted, 1)), F.lit(0)
-                ).alias("requests_received"),
-                F.coalesce(
-                    F.sum(F.when(accepted, F.length("body"))), F.lit(0)
-                ).alias("bytes_received"),
-            )
-        writer = stream.writeStream.foreachBatch(self._flush).option(
-            "checkpointLocation", self.checkpoint_dir
+        writer = (
+            requests_stream_df(self.spark, self.source_dir)
+            .writeStream.foreachBatch(self._flush)
+            .option("checkpointLocation", self.checkpoint_dir)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)

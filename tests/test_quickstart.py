@@ -3,8 +3,8 @@
 The quickstart is the executable form of MIGRATION.md — if an API it uses
 drifts (shim endpoints, FlushPipeline signature, sink_frame columns,
 replay_dlq counts), a migrating user's first contact breaks. Its own
-asserts cover the semantics (405/404 paths, redaction, DLQ drain); this
-test just executes main() end to end.
+asserts cover the semantics (405/404 paths, redaction, DLQ drain, the
+received counters); this test executes main() end to end.
 """
 
 import os
@@ -27,3 +27,4 @@ def test_quickstart_runs_end_to_end(spark, capsys, monkeypatch):
     assert "done." in out
     assert "'replayed': 1" in out
     assert "password=*" in out
+    assert '"relap.count.proxyhouse.requests_received": 4' in out

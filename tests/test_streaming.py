@@ -45,6 +45,7 @@ def _run_pipeline(spark, dirs, fail):
     )
     q = pipe.start(available_now=True)
     q.awaitTermination(120)
+    return pipe
 
 
 def test_flush_one_row_per_key_per_batch(spark, dirs):
@@ -59,17 +60,39 @@ def test_flush_one_row_per_key_per_batch(spark, dirs):
     assert sink.count() == 3
     assert sink.agg(F.sum("rowcount")).first()[0] == 300
     assert sink.select("batch_id").distinct().count() == 1
-    # observed per-flush delivery metrics (main.go:394-405 analog)
+    # the trigger's one record (received main.go:209-216, sent 394-405)
     assert len(pipe.metrics) == 1
     m = pipe.metrics[0]
+    assert list(m) == [
+        "batch_id", "requests_received", "bytes_received", "keys",
+        "requests_sent", "rows_sent", "bytes_sent", "spilled_keys", "send_ms",
+    ]
+    assert m["requests_received"] == 300
+    assert m["bytes_received"] == sum(len(f"({i})") for i in range(300))
+    assert m["keys"] == 3 and m["spilled_keys"] == 0
     assert m["requests_sent"] == 3 and m["rows_sent"] == 300
-    assert m["bytes_sent"] > 0
+    assert m["bytes_sent"] == sink.agg(F.sum(F.length("buffer"))).first()[0]
+    assert m["send_ms"] >= 0
+
+
+def test_flush_joins_values_bodies_with_the_configured_delim(spark, dirs):
+    """The -delim flag (main.go:38) reaches the live flush's keyed concat."""
+    reqs = [_req(1, "t0", "(1)"), _req(2, "t0", "(2)")]
+    spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
+    FlushPipeline(
+        spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"], delim=";"
+    ).start(available_now=True).awaitTermination(120)
+    assert [r.buffer for r in spark.read.parquet(dirs["sink"]).collect()] == ["(1);(2)"]
 
 
 def test_failed_keys_spill_to_dlq_at_level_1(spark, dirs):
-    reqs = [_req(1, "good", "(1)"), _req(2, "bad", "(2)")]
+    # the empty body is rejected (405): neither received nor flushed
+    reqs = [_req(1, "good", "(1)"), _req(2, "bad", "(2)"), _req(3, "good", "")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
-    _run_pipeline(spark, dirs, F.col("table_name") == "bad")
+    pipe = _run_pipeline(spark, dirs, F.col("table_name") == "bad")
+    m = pipe.metrics[0]
+    assert (m["requests_received"], m["bytes_received"]) == (2, 6)
+    assert (m["keys"], m["requests_sent"], m["spilled_keys"]) == (2, 1, 1)
     sink = spark.read.parquet(dirs["sink"])
     assert sink.count() == 1 and sink.first().table_name == "good"
     dlq = spark.read.parquet(dirs["dlq"])
@@ -178,45 +201,6 @@ def test_watermark_drops_late_rows(spark, dirs, tmp_path):
     assert out[0] == 2      # late event_id=4 NOT counted
     assert out[3] == 1
     assert 6 not in out     # still open — unemitted, state bounded
-
-
-def test_unload_state_stores_between_runs_preserves_state(spark, dirs, tmp_path):
-    """The explicit heap-hygiene utility (r09): StateStore.stop() clears
-    the executor-side provider cache between availableNow runs, forcing
-    the next run down the checkpoint-reload path — results must be
-    IDENTICAL to the warm-cache run of the same scenario (the watermark
-    test above). Also pins that it is a no-op while streams are active
-    and safe to call twice."""
-    from proxyhouse_spark.streaming.pipeline import (
-        unload_state_stores,
-        windowed_counts,
-    )
-
-    out_dir = str(tmp_path / "wins")
-
-    def req_at(event_id, minute):
-        r = list(_req(event_id, "t0", f"({event_id})"))
-        r[1] = dt.datetime(2024, 1, 1) + dt.timedelta(minutes=minute)
-        return tuple(r)
-
-    batch1 = [req_at(1, 10), req_at(2, 20), req_at(3, 180)]
-    spark.createDataFrame(batch1, COLS).coalesce(1).write.mode("append").parquet(
-        dirs["source"]
-    )
-    windowed_counts(spark, dirs["source"], out_dir, dirs["ckpt"]).awaitTermination(120)
-    unload_state_stores(spark)
-    unload_state_stores(spark)  # idempotent
-
-    batch2 = [req_at(4, 30), req_at(5, 360)]
-    spark.createDataFrame(batch2, COLS).coalesce(1).write.mode("append").parquet(
-        dirs["source"]
-    )
-    windowed_counts(spark, dirs["source"], out_dir, dirs["ckpt"]).awaitTermination(120)
-
-    out = {r.window_start.hour: r.n_requests for r in spark.read.parquet(out_dir).collect()}
-    assert out[0] == 2      # late event_id=4 NOT counted — state restored
-    assert out[3] == 1
-    assert 6 not in out
 
 
 def test_dedup_stream_suppresses_dups_within_watermark(spark, dirs, tmp_path):
@@ -420,11 +404,12 @@ def test_flush_checkpoint_scope_is_per_pipeline(spark, tmp_path):
 
 def test_graphite_metrics_match_metric_counters(spark, dirs):
     """T-graphite (metric.go:21-60): run the REAL flush pipeline over the
-    sf0.001 request fixture with a MetricStorage attached. Received-side
-    counters arrive via observe() + StreamingQueryListener, sent-side via
-    the flush; the captured totals must equal q_metric_counters' answers
-    for the same fixture, and the 2s-cadence emitter must drain them as
-    Graphite lines with the bytes_to_milliseconds derivation."""
+    sf0.001 request fixture with a MetricStorage attached and no listener:
+    the flush's per-trigger record carries the received and sent counters
+    and increments them when the trigger ends. The captured totals must
+    equal q_metric_counters' answers for the same fixture, and the
+    2s-cadence emitter must drain them as Graphite lines with the
+    bytes_to_milliseconds derivation."""
     import time
 
     from proxyhouse_spark import registry
@@ -435,30 +420,20 @@ def test_graphite_metrics_match_metric_counters(spark, dirs):
         MetricStorage,
     )
     from proxyhouse_spark.sources.requests import requests_df
-    from proxyhouse_spark.streaming.pipeline import GraphiteListener
     from tests.conftest import SF_SMALL
 
     requests_df(spark, SF_SMALL).coalesce(1).write.parquet(dirs["source"])
     expected = registry.QUERIES["q_metric_counters"](spark, SF_SMALL).first()
 
     storage = MetricStorage()
-    listener = GraphiteListener(storage)
-    spark.streams.addListener(listener)
-    try:
-        pipe = FlushPipeline(
-            spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"],
-            metric_storage=storage,
-        )
-        pipe.start(available_now=True).awaitTermination(120)
-        deadline = time.time() + 30  # listener events are delivered async
-        while listener.events == 0 and time.time() < deadline:
-            time.sleep(0.2)
-    finally:
-        spark.streams.removeListener(listener)
-    assert listener.events >= 1
+    pipe = FlushPipeline(
+        spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"],
+        metric_storage=storage,
+    )
+    pipe.start(available_now=True).awaitTermination(120)
 
     snap = storage.snapshot()
-    # received side (observe + listener) == the oracled counter query
+    # received side (the flush record) == the oracled counter query
     assert snap[f"{PREFIX_CNT}.requests_received"] == expected["requests_received"]
     assert snap[f"{PREFIX_CNT}.bytes_received"] == expected["bytes_received"]
     # sent side (flush increments): every accepted row flushed exactly once;
