@@ -1156,6 +1156,8 @@ def _merge_triangles(
 
     from pyspark.sql import functions as F
 
+    from ..checkpoints import release_scope, scoped_checkpoint
+
     snap = os.path.join(base, "edges")
     deltas = os.path.join(base, "deltas")
     if passes.applied(snap, batch_id):
@@ -1176,7 +1178,9 @@ def _merge_triangles(
         .select("u", "v")
         .distinct()
     )
-    new = pairs.join(index, ["u", "v"], "left_anti").localCheckpoint()
+    # scoped per stream: the batch's new edges die when the merge returns
+    scope = "stream_triangles_new:" + base
+    new = scoped_checkpoint(pairs.join(index, ["u", "v"], "left_anti"), scope)
     # adjacency = accumulated ∪ new, both directions; the new-edge leg is
     # the small side of every join below
     und = index.unionByName(new)
@@ -1203,6 +1207,7 @@ def _merge_triangles(
         "append"
     ).parquet(snap)
     passes.mark_applied(snap, batch_id)
+    release_scope(spark, scope)
 
 
 def stream_triangles_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -252,7 +252,8 @@ def semantic_dedup_oracle() -> str:
 def kmeans_loop(
     spark: SparkSession, sf_dir: str, max_rounds: int = 25
 ) -> tuple[DataFrame, int]:
-    """Run Lloyd to convergence; returns (assignment frame, rounds run)."""
+    """Run Lloyd to convergence; returns (assignment frame, rounds run).
+    The frame is a scoped checkpoint: the next call frees it."""
     from ..checkpoints import release_scope, scoped_checkpoint
 
     table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
@@ -292,10 +293,10 @@ def kmeans_loop(
     final = spark.sql(
         f"SELECT * FROM {_assign('loop_embc', 'loop_cents', duck=False)} t"
     )
-    final = final.localCheckpoint()  # detach from the scoped frames
-    release_scope(spark, "kmeans_loop_embc")
-    release_scope(spark, "kmeans_loop_cents_0")
-    release_scope(spark, "kmeans_loop_cents_1")
+    # detach from the scoped frames; the next call frees this generation
+    final = scoped_checkpoint(final, "kmeans_loop_final")
+    for scope in ("kmeans_loop_embc", "kmeans_loop_cents_0", "kmeans_loop_cents_1"):
+        release_scope(spark, scope)
     return final, rounds
 
 

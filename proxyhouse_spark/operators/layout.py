@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoints import scoped_checkpoint
 from ..tables import table
 
 # ---------------------------------------------------------------------------
@@ -396,8 +397,9 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # materialize the co-located join while broadcast is still off
-        # (the conf is plan-time state; localCheckpoint pins the result)
-        return out.localCheckpoint(eager=True)
+        # (the conf is plan-time state; the checkpoint pins the result,
+        # and the next call frees it)
+        return scoped_checkpoint(out, "bucketed_join")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -1,15 +1,20 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-one JVM); the same settings are the right starting point on a real cluster:
-AQE handles runtime re-planning (adaptive shuffle-partition coalescing, skew
-joins), Arrow accelerates any pandas interchange, and the session timezone is
+Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: one thread
+per CPU this process may run on, one JVM) with a driver heap of
+``$SPARK_GRAFT_DRIVER_MEM`` (default: half the machine's RAM); the same
+settings are the right starting point on a real cluster: AQE handles
+runtime re-planning (adaptive shuffle-partition coalescing, skew joins),
+Arrow accelerates any pandas interchange, and the session timezone is
 pinned to UTC so timestamp semantics match the DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -24,28 +29,54 @@ def ship_package(spark: SparkSession) -> None:
     ``proxyhouse_spark`` (mapInPandas in multimodal/observability) dies
     with ModuleNotFoundError the moment executors are separate processes —
     found by the local-cluster[2,4,8192] differential smoke (round 4). On
-    a 1000-executor deployment this zip is the ``--py-files`` artifact;
-    here it's built once per session into the session's temp scratch."""
+    a 1000-executor deployment this zip is the ``--py-files`` artifact."""
     sc = spark.sparkContext
     if sc._jsc is None:  # stopped session — nothing to ship to
         return
+    sc.addPyFile(_package_zip())
+
+
+@functools.cache
+def _package_zip() -> str:
+    """This process's zip of the package, built once into a directory the
+    process created and removes at exit: a name shared across processes
+    (say, one keyed by PID) would ship a stale build once a PID is reused.
+    One path per process, because a context refuses a second path under
+    the same file name."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"proxyhouse_spark-{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, dirs, files in os.walk(pkg_dir):
-                dirs[:] = [d for d in dirs if d != "__pycache__"]
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
+    tmp = tempfile.mkdtemp(prefix="proxyhouse_spark-")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    zip_path = os.path.join(tmp, "proxyhouse_spark.zip")
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in files:
+                if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    sc.addPyFile(zip_path)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+    return zip_path
+
+
+def default_cpus(affinity: set[int] | None = None) -> int:
+    """``$SPARK_GRAFT_CPUS``, else the number of CPUs this process may run
+    on (``affinity``, by default the process's own set)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env or len(affinity or os.sched_getaffinity(0)))
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of ``MemTotal`` in ``meminfo``
+    (by default ``/proc/meminfo``): the other half is headroom for the
+    Python workers, the JVM's off-heap memory and the OS. On a host
+    without swap a heap sized past the RAM meets the kernel's OOM killer,
+    not a JVM error."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    if meminfo is None:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    kib = int(meminfo.split("MemTotal:")[1].split()[0])
+    return f"{kib // 2048}m"
 
 
 def get_spark(app_name: str = "proxyhouse_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -56,13 +87,11 @@ def get_spark(app_name: str = "proxyhouse_spark", shuffle_partitions: int | None
     memory, and on a real cluster AQE coalesces post-shuffle partitions to
     size anyway (``spark.sql.adaptive.coalescePartitions.enabled``).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -72,7 +101,7 @@ def get_spark(app_name: str = "proxyhouse_spark", shuffle_partitions: int | None
         # timestamp type — read as epoch-nanos long, converted in tables.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,9 +1,10 @@
 """Small-file compaction for streaming sink / DLQ directories, and the one
 rule both the compaction and the DLQ replay use to rewrite a directory.
 
-Every micro-batch flush appends at least one parquet file per partition
-(FlushPipeline, DLQ spill, replay rewrites), so a long-running stream turns
-its sink directories into thousands of KB-sized files — and at cluster
+Every micro-batch flush that delivers a key appends a parquet file, and
+every DLQ spill and replay pass appends more (a trigger that delivers
+nothing writes no sink file), so a long-running stream turns its sink
+directories into thousands of KB-sized files — and at cluster
 scale the cost is not the data, it is the *file count*: scan planning,
 footer reads, and listing all go O(files). The reference never hits this
 (its DLQ is one pudge file per failed flush, deleted on replay —
@@ -29,9 +30,9 @@ new generation — duplicates of that pass's rows, which the at-least-once
 contract allows — and never a loss, with no recovery step on restart.
 Readers between the append and the last delete see those duplicates; a
 production deployment on Delta/Iceberg replaces this with
-OPTIMIZE/rewrite_data_files. Directories are flat (the DLQ and the
-unpartitioned sink layout): a partitioned sink's subdirectories are not
-listed, so it is left as is.
+OPTIMIZE/rewrite_data_files. Directories are flat (the DLQ and the sink);
+the replay's deliveries are their own flat table, ``<sink>/replayed``,
+compacted as a directory of its own.
 """
 
 from __future__ import annotations
@@ -66,15 +67,12 @@ def parquet_file_count(path: str) -> int:
     return len(parquet_files(path))
 
 
-def append_parquet(frame: DataFrame, path: str, *partition_by: str) -> None:
+def append_parquet(frame: DataFrame, path: str) -> None:
     """Append ``frame`` into ``path`` while holding the directory's lock."""
-    writer = frame.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     with _dir_locks_guard:
         lock = _dir_locks.setdefault(os.path.realpath(path), threading.Lock())
     with lock:
-        writer.parquet(path)
+        frame.write.mode("append").parquet(path)
 
 
 def replace_files(frame: DataFrame, path: str, files: list[str]) -> None:

@@ -40,7 +40,10 @@ before flush, main.go:198-218) and is at-least-once downstream with
 possible duplicates (main.go:423-441). This pipeline upgrades the ack-loss
 window away (checkpointed source: a crashed trigger re-reads its input)
 and keeps at-least-once downstream; the sink table carries ``batch_id`` so
-an idempotent consumer can dedupe on (batch_id, uri).
+an idempotent consumer can dedupe on (batch_id, uri). Replayed deliveries
+land in ``sink_dir/replayed`` (``batch_id`` -1), a separate table: a read
+of ``sink_dir`` does not include it, so that consumer reads both. A
+trigger that delivers nothing writes no sink file.
 """
 
 from __future__ import annotations
@@ -137,6 +140,10 @@ class FlushPipeline:
     the flush frame, it returns ``{uri: delivered}``; delivered keys land in
     the sink table and the rest spill to the DLQ at level 1. Without a
     sender the Parquet sink is the delivery and every key is delivered.
+    A trigger that delivers no key (a full outage, or only refused
+    requests) writes no sink file. ``replay_dlq`` writes its deliveries to
+    ``sink_dir/replayed``, a separate table that a read of ``sink_dir``
+    does not include: a (batch_id, uri) consumer reads both.
 
     Each trigger appends one record to ``metrics``: ``batch_id``,
     ``requests_received`` and ``bytes_received`` (accepted inserts only,
@@ -159,7 +166,6 @@ class FlushPipeline:
         repl: str = REPL_HOST,
         delim: str = ",",
         sender: Sender | None = None,
-        partition_by_table: bool = False,
         metric_storage: MetricStorage | None = None,
     ) -> None:
         self.spark = spark
@@ -173,12 +179,6 @@ class FlushPipeline:
         # the -delim flag (main.go:38): the Values delimiter of the keyed concat
         self.delim = delim
         self.sender = sender
-        # Hive-partition the sink by extracted table name: per-table readers
-        # then prune to their directory at the SCAN (PartitionFilters), the
-        # layout that keeps a 100 TB multi-tenant sink queryable. The
-        # reference's analog is its per-table metric split (extractTable,
-        # main.go:210-216) — here the split is physical.
-        self.partition_by_table = partition_by_table
         self.metrics: list[dict] = []  # one record per trigger
         self.metric_storage = metric_storage
 
@@ -221,20 +221,26 @@ class FlushPipeline:
             send_ms = int((time.monotonic() - send_start) * 1000)
             n_keys = keys_obs.get["keys"]
             ok, failed = _split_by_statuses(grouped, statuses, n_rows=n_keys)
-            ok = ok.observe(
-                sent,
-                F.count(F.lit(1)).alias("requests_sent"),
-                F.coalesce(F.sum("rowcount"), F.lit(0)).alias("rows_sent"),
-                F.coalesce(F.sum(F.length("buffer")), F.lit(0)).alias("bytes_sent"),
-            )
-            # One output file per flush mirrors "few large requests": the frame
-            # is tiny (one row per distinct uri), so coalesce(1) costs nothing.
-            write_start = time.monotonic()
-            parts = ["table_name"] if self.partition_by_table else []
-            append_parquet(ok.coalesce(1), self.sink_dir, *parts)
-            if self.sender is None:
-                send_ms = int((time.monotonic() - write_start) * 1000)
-            record = {"batch_id": batch_id, **received.get, "keys": n_keys, **sent.get}
+            record = {"batch_id": batch_id, **received.get, "keys": n_keys,
+                      "requests_sent": 0, "rows_sent": 0, "bytes_sent": 0}
+            # An empty append still writes a zero-row part file (and runs a
+            # job), and Observation.get on a frame never written waits
+            # forever: a trigger that delivers nothing writes nothing.
+            if (n_keys if statuses is None else any(statuses.values())):
+                ok = ok.observe(
+                    sent,
+                    F.count(F.lit(1)).alias("requests_sent"),
+                    F.coalesce(F.sum("rowcount"), F.lit(0)).alias("rows_sent"),
+                    F.coalesce(F.sum(F.length("buffer")), F.lit(0)).alias("bytes_sent"),
+                )
+                # One output file per flush mirrors "few large requests": the
+                # frame is tiny (one row per distinct uri), so coalesce(1)
+                # costs nothing.
+                write_start = time.monotonic()
+                append_parquet(ok.coalesce(1), self.sink_dir)
+                if self.sender is None:
+                    send_ms = int((time.monotonic() - write_start) * 1000)
+                record.update(sent.get)
             record["spilled_keys"] = n_keys - record["requests_sent"]
             record["send_ms"] = send_ms
             if record["spilled_keys"]:
@@ -284,7 +290,9 @@ def replay_dlq(
     - read the DLQ, skip quarantined packets (level >= MAX_LEVEL — the 'O'
       prefix rule as a predicate),
     - replay in (level, created_ns) order (the lexicographic filename sort),
-    - delivered packets land in the sink; failed packets are re-spilled at
+    - delivered packets land in ``sink_dir/replayed`` (``batch_id`` -1), a
+      separate table from the flush's ``sink_dir``, which a read of
+      ``sink_dir`` does not include; failed packets are re-spilled at
       level + 1; level >= MAX_LEVEL → quarantined forever.
 
     Every outcome comes from ``sender``, the flush path's delivery contract

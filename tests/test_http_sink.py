@@ -226,13 +226,16 @@ def test_http_replay_counts_deliver_escalate_and_quarantine(
     assert [r.buffer for r in delivered] == ["(ok)"]
 
 
-@pytest.mark.parametrize("tables, jobs", [(("good", "good"), 4), (("good", "bad"), 7)])
+@pytest.mark.parametrize(
+    "tables, jobs", [(("good", "good"), 4), (("good", "bad"), 7), (("bad", "bad"), 4)]
+)
 def test_flush_trigger_job_count(spark, tmp_path, http_server, tables, jobs):
     """Spark jobs of one flush trigger, counted under a job group: the
     flush-frame checkpoint (its aggregation stage and the checkpoint
     itself), the send and the sink append; a failing key adds the status
     broadcast to the sink append and the DLQ spill with its own broadcast.
-    The trigger's record rides those jobs and adds none."""
+    When no key is delivered there is no sink append (and no broadcast), only
+    the spill. The trigger's record rides those jobs and adds none."""
     dirs = {k: str(tmp_path / k) for k in ("source", "sink", "dlq", "ckpt")}
     reqs = [_req(i, t, f"({i})") for i, t in enumerate(tables)]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
@@ -251,5 +254,5 @@ def test_flush_trigger_job_count(spark, tmp_path, http_server, tables, jobs):
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
     m = pipe.metrics[0]
-    assert (m["requests_received"], m["requests_sent"]) == (2, 1)
+    assert (m["requests_received"], m["requests_sent"]) == (2, "good" in tables)
     assert m["spilled_keys"] == (tables[1] == "bad")

@@ -286,3 +286,16 @@ def test_minhash_merge_jobs_stay_in_the_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     assert tracker.getJobIdsForGroup("minhash-merge")
+
+
+def test_triangle_merge_holds_no_checkpoint_after_it_returns(
+    spark, tmp_path, persistent_rdds
+):
+    """The triangle merge checkpoints its batch's new edges and frees them
+    when the batch returns, so a long-running stream holds no block set per
+    batch."""
+    merge, batches, _ = _triangles(spark, str(tmp_path))
+    for bid, batch in enumerate(batches):
+        before = persistent_rdds()
+        merge(spark, batch, str(tmp_path / "tri"), bid)
+        assert persistent_rdds() == before

@@ -101,6 +101,19 @@ def test_failed_keys_spill_to_dlq_at_level_1(spark, dirs):
     assert row.level == 1 and "bad" in row.uri and row.body == "(2)"
 
 
+def test_a_trigger_that_delivers_nothing_writes_no_sink_file(spark, dirs):
+    """A full outage spills every key and appends nothing to the sink: an
+    empty append would still write a zero-row part file on every trigger."""
+    reqs = [_req(1, "bad", "(1)"), _req(2, "worse", "(2)")]
+    spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
+    pipe = _run_pipeline(spark, dirs, F.lit(True))
+    assert glob.glob(os.path.join(dirs["sink"], "**", "*.parquet"), recursive=True) == []
+    m = pipe.metrics[0]
+    assert (m["keys"], m["spilled_keys"]) == (2, 2)
+    assert (m["requests_sent"], m["rows_sent"], m["bytes_sent"]) == (0, 0, 0)
+    assert spark.read.parquet(dirs["dlq"]).count() == 2
+
+
 def test_replay_delivers_and_clears_queue(spark, dirs):
     reqs = [_req(1, "bad", "(1)")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
@@ -254,32 +267,6 @@ def test_enrich_stream_joins_routing_dim_without_shuffle(spark, dirs, tmp_path):
 
     out = {r.table_name: r.route for r in spark.read.parquet(out_dir).collect()}
     assert out == {"t0": "shard-a", "t1": "shard-b", "t9": None}
-
-
-def test_partitioned_sink_prunes_per_table_reads(spark, dirs):
-    """partition_by_table=True lays the sink out hive-style by table_name;
-    a per-table read then prunes at the scan (PartitionFilters), never
-    listing the other tables' directories."""
-    import os
-
-    reqs = [_req(i, f"t{i % 3}", f"({i})") for i in range(30)]
-    spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
-    FlushPipeline(
-        spark, dirs["source"], dirs["sink"], dirs["dlq"], dirs["ckpt"],
-        partition_by_table=True,
-    ).start(available_now=True).awaitTermination(120)
-
-    assert sorted(
-        d for d in os.listdir(dirs["sink"]) if d.startswith("table_name=")
-    ) == ["table_name=t0", "table_name=t1", "table_name=t2"]
-
-    one = spark.read.parquet(dirs["sink"]).filter(F.col("table_name") == "t1")
-    assert one.count() == 1 and one.first().rowcount == 10
-    plan = one._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "table_name" in pf  # pruned at the scan, not filtered after
 
 
 def test_split_by_statuses_is_a_join_not_an_in_literal(spark):
@@ -974,18 +961,19 @@ def test_replay_numbers_its_queue_without_a_window(spark, tmp_path, monkeypatch)
     assert sent == list(enumerate(expected, start=1))
 
 
-def test_flush_and_replay_hold_no_checkpoint_after_they_return(spark, dirs):
+def test_flush_and_replay_hold_no_checkpoint_after_they_return(
+    spark, dirs, persistent_rdds
+):
     """Each flush trigger and each replay frees its checkpoint before it
     returns: nothing they created stays in the block manager, and no scope
     outlives the trigger or the query."""
     from proxyhouse_spark import checkpoints
 
-    sc = spark.sparkContext
-    before = checkpoints._persistent_ids(sc)
+    before = persistent_rdds()
     reqs = [_req(1, "good", "(1)"), _req(2, "bad", "(2)")]
     spark.createDataFrame(reqs, COLS).coalesce(1).write.parquet(dirs["source"])
     _run_pipeline(spark, dirs, F.col("table_name") == "bad")
     replay_dlq(spark, dirs["dlq"], dirs["sink"])
     assert spark.read.parquet(dirs["sink"] + "/replayed").count() == 1
-    assert checkpoints._persistent_ids(sc) - before == set()
+    assert persistent_rdds() - before == set()
     assert not [k for k in checkpoints._generations if k.startswith("flush_frame:")]

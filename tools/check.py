@@ -23,7 +23,12 @@ sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
-from proxyhouse_spark.session import get_spark  # noqa: E402
+from proxyhouse_spark.session import (  # noqa: E402
+    default_cpus,
+    default_driver_memory,
+    get_spark,
+    ship_package,
+)
 from proxyhouse_spark.tables import TABLES  # noqa: E402
 
 
@@ -77,7 +82,7 @@ def vanilla_spark():
 
     from pyspark.sql import SparkSession
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     # SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the same differential
     # on a 2-executor-process cluster — the single-JVM-assumption smoke
     # (localCheckpoint visibility, file: path sharing, driver-side merges).
@@ -93,14 +98,10 @@ def vanilla_spark():
         # executor memory comes from the master string; keep the driver slim
         b = b.config("spark.driver.memory", "8g")
     else:
-        b = b.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        b = b.config("spark.driver.memory", default_driver_memory())
     spark = b.getOrCreate()
     # executor workers need the package for Arrow UDF imports — the bug the
     # local-cluster smoke exists to catch (see session.ship_package)
-    from proxyhouse_spark.session import ship_package
-
     ship_package(spark)
     return spark
 

@@ -138,11 +138,11 @@ def run_variant(args) -> int:
     from pyspark.sql import SparkSession
 
     from proxyhouse_spark import registry
-    from proxyhouse_spark.session import ship_package
+    from proxyhouse_spark.session import default_cpus, default_driver_memory, ship_package
 
     log_dir = tempfile.mkdtemp(prefix="tri_evlog_")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # THE ENGINE'S SESSION CONFIG (session.py:get_spark — 48g heap, AQE,
+    cpus = default_cpus()
+    # THE ENGINE'S SESSION CONFIG (session.py:get_spark — heap, AQE,
     # Arrow, nanosAsLong) + the event log. A first cut without the heap
     # setting measured a 1 GiB-default JVM: 28–100 s of GC inside 7–13 s
     # walls — a different machine than the one bench/judge run on.
@@ -156,10 +156,7 @@ def run_variant(args) -> int:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", log_dir)
         .config("spark.eventLog.compress", "false")
